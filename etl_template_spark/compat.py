@@ -62,25 +62,33 @@ from pyspark.sql import functions as F
 # ample headroom for 100 TB-scale sums of price-like values.
 _PRECISION = 30
 
+# ONE DEFINITION PER FORMULATION.  Each formulation below is written
+# once, as Spark-SQL expression text over a SQL expression ``expr`` (a
+# column name or any expression text).  Statement builders interpolate
+# the text into ``spark.sql``; the Column helpers are ``F.expr`` over
+# the same text, which parses to the same Catalyst expression a
+# hand-built Column would — so both paths run the same plan and give
+# the same bits, and an edit to a formulation reaches every caller.
+# The rest of the package (similarity folds, MinHash terms) follows the
+# same rule.
 
-def dec(col: Column | str, scale: int = 6) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal({_PRECISION},{scale})")
+
+def dec_sql(expr: str, scale: int = 6) -> str:
+    return f"CAST(({expr}) AS DECIMAL({_PRECISION},{scale}))"
 
 
-def dsum(col: Column | str, scale: int = 6) -> Column:
+def dsum_sql(expr: str, scale: int = 6) -> str:
     """Order-independent double sum (exact decimal accumulation)."""
-    return F.sum(dec(col, scale)).cast("double")
+    return f"CAST(SUM({dec_sql(expr, scale)}) AS DOUBLE)"
 
 
-def davg(col: Column | str, scale: int = 6) -> Column:
+def davg_sql(expr: str, scale: int = 6) -> str:
     """Order-independent double mean: exact decimal sum / count, divided
     in double (both engines perform the identical IEEE division)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return dsum(c, scale) / F.count(c)
+    return f"({dsum_sql(expr, scale)} / COUNT({expr}))"
 
 
-def fp6(col: Column | str) -> Column:
+def fp6_sparksql(expr: str) -> str:
     """Fixed-point scale-6 value as an exact integer decimal:
     ``sign(x) * floor(|x| * 1e6 + 0.5)`` cast to ``decimal(30,0)``.
 
@@ -88,14 +96,15 @@ def fp6(col: Column | str) -> Column:
     ``Double.toString``/BigDecimal allocation — the per-row cost that
     dominates ``dec``'s double→decimal cast (r13 profiling: ~60% of
     q_agg_group's runtime was the five cast columns)."""
-    c = (F.col(col) if isinstance(col, str) else col).cast("double")
-    n = F.when(c >= 0, F.floor(c * 1e6 + F.lit(0.5))).otherwise(
-        -F.floor(-c * 1e6 + F.lit(0.5))
+    x = f"CAST(({expr}) AS DOUBLE)"
+    n = (
+        f"CASE WHEN {x} >= 0 THEN FLOOR({x} * CAST(1000000 AS DOUBLE) + 0.5D)"
+        f" ELSE - FLOOR(- {x} * CAST(1000000 AS DOUBLE) + 0.5D) END"
     )
-    return n.cast("decimal(30,0)")
+    return f"CAST({n} AS DECIMAL({_PRECISION},0))"
 
 
-def dsum_fp(col: Column | str) -> Column:
+def dsum_fp_sparksql(expr: str) -> str:
     """Order-independent double sum over CERTIFIED money-like columns —
     bit-identical to ``dsum`` but ~25-30% faster end-to-end on
     aggregation-bound queries (r13 A/B on q_agg_group at sf0.1:
@@ -119,47 +128,36 @@ def dsum_fp(col: Column | str) -> Column:
     and fails on the first divergent value.  Everything else —
     transcendental outputs, embedding folds, uncertified columns —
     stays on ``dsum``/``davg``."""
-    return (F.sum(fp6(col)) / F.lit(1000000)).cast("double")
-
-
-def davg_fp(col: Column | str) -> Column:
-    """``dsum_fp`` / count — the certified-column twin of ``davg``."""
-    c = F.col(col) if isinstance(col, str) else col
-    return dsum_fp(c) / F.count(c)
-
-
-def fp6_sparksql(expr: str) -> str:
-    """Spark-SQL text twin of ``fp6`` — the same operator sequence
-    (CAST DOUBLE → FP half-up to integer units → DECIMAL(30,0))."""
-    x = f"CAST(({expr}) AS DOUBLE)"
-    n = (
-        f"CASE WHEN {x} >= 0 THEN FLOOR({x} * CAST(1000000 AS DOUBLE) + 0.5D)"
-        f" ELSE - FLOOR(- {x} * CAST(1000000 AS DOUBLE) + 0.5D) END"
-    )
-    return f"CAST({n} AS DECIMAL({_PRECISION},0))"
-
-
-def dsum_fp_sparksql(expr: str) -> str:
-    """Spark-SQL text twin of ``dsum_fp`` (r14, guide §7.3): the same
-    operator sequence — CAST DOUBLE → FP half-up to integer units →
-    exact DECIMAL(30,0) sum → /1e6 → DOUBLE — written as SQL so a
-    query can be stated as ONE parsed statement instead of eagerly
-    analyzed Dataset ops.  Same certification contract as ``dsum_fp``
-    (the guard sweep); equivalence is snapshot- and oracle-gated."""
     return f"CAST(SUM({fp6_sparksql(expr)}) / 1000000 AS DOUBLE)"
 
 
 def davg_fp_sparksql(expr: str) -> str:
-    """``dsum_fp_sparksql`` / COUNT — Spark-SQL text twin of ``davg_fp``."""
+    """``dsum_fp`` / count — ``davg`` for certified columns."""
     return f"({dsum_fp_sparksql(expr)} / COUNT({expr}))"
 
 
-def dsum_sql(expr: str, scale: int = 6) -> str:
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL({_PRECISION},{scale}))) AS DOUBLE)"
+def dec(expr: str, scale: int = 6) -> Column:
+    return F.expr(dec_sql(expr, scale))
 
 
-def davg_sql(expr: str, scale: int = 6) -> str:
-    return f"({dsum_sql(expr, scale)} / COUNT({expr}))"
+def dsum(expr: str, scale: int = 6) -> Column:
+    return F.expr(dsum_sql(expr, scale))
+
+
+def davg(expr: str, scale: int = 6) -> Column:
+    return F.expr(davg_sql(expr, scale))
+
+
+def fp6(expr: str) -> Column:
+    return F.expr(fp6_sparksql(expr))
+
+
+def dsum_fp(expr: str) -> Column:
+    return F.expr(dsum_fp_sparksql(expr))
+
+
+def davg_fp(expr: str) -> Column:
+    return F.expr(davg_fp_sparksql(expr))
 
 
 def rounding_agreement_failures(values, scale: int = 6) -> list[float]:

@@ -83,6 +83,17 @@ def _parquet_files(path: str) -> list[str]:
     )
 
 
+def _open_parquet(path: str):
+    """``pq.ParquetFile`` with INT96 timestamps read as microseconds.
+    Spark's JVM writer (``io.write_versioned``, ``Pipeline``) stores
+    timestamps as INT96, which pyarrow otherwise reads as
+    ``timestamp[ns]`` — an Arrow type Spark rejects
+    (``UNSUPPORTED_ARROWTYPE``) when the column is scanned."""
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
+
+
 def _reject_partitioned(path: str, step: str) -> None:
     """Fail LOUDLY on a hive-partitioned version (r10 review): this
     connector lists only top-level data files, so a version written
@@ -264,11 +275,9 @@ class VersionedReader(DataSourceReader):
         return declined  # Spark re-applies these after the scan
 
     def partitions(self):
-        import pyarrow.parquet as pq
-
         parts = []
         for f in _parquet_files(self._path):
-            md = pq.ParquetFile(f).metadata
+            md = _open_parquet(f).metadata
             # Full dotted paths, not leaf names: a nested struct leaf can
             # share its NAME with a filtered top-level column (e.g. struct
             # `s.x` vs column `x`), and `names.index("x")` on leaf names
@@ -286,11 +295,9 @@ class VersionedReader(DataSourceReader):
         return parts or [RowGroupPartition(file="", row_group=-1)]
 
     def read(self, partition: RowGroupPartition):
-        import pyarrow.parquet as pq
-
         if partition.row_group < 0:
             return iter(())
-        pf = pq.ParquetFile(partition.file)
+        pf = _open_parquet(partition.file)
         table = pf.read_row_group(partition.row_group)
         expr = _arrow_filter(self._filters)
         if expr is not None:
@@ -390,8 +397,6 @@ class VersionedStreamReader(SimpleDataSourceStreamReader):
         return hi
 
     def _rows_between(self, lo: int, hi: int) -> list[tuple]:
-        import pyarrow.parquet as pq
-
         # materialized (not a generator): Spark's prefetch cache copies
         # and pickles the returned iterator between planning and commit
         rows: list[tuple] = []
@@ -401,7 +406,7 @@ class VersionedStreamReader(SimpleDataSourceStreamReader):
                 continue  # uncommitted claim — not yet visible
             _reject_partitioned(d, self._step)
             for f in _parquet_files(d):
-                for batch in pq.ParquetFile(f).iter_batches():
+                for batch in _open_parquet(f).iter_batches():
                     rows.extend(tuple(r.values()) for r in batch.to_pylist())
         return rows
 
@@ -424,7 +429,6 @@ class VersionedDataSource(DataSource):
         return FORMAT_NAME
 
     def schema(self):
-        import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
 
         root, step, version = _resolve(self.options)
@@ -437,7 +441,7 @@ class VersionedDataSource(DataSource):
         files = _parquet_files(vdir)
         if not files:
             return StructType([])
-        return from_arrow_schema(pq.ParquetFile(files[0]).schema_arrow)
+        return from_arrow_schema(_open_parquet(files[0]).schema_arrow)
 
     def reader(self, schema) -> VersionedReader:
         root, step, version = _resolve(self.options)

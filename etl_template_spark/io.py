@@ -77,10 +77,6 @@ TABLE_DDL: dict[str, str] = {
 TABLES = tuple(TABLE_DDL)
 
 
-def table_schema(name: str) -> T.StructType:
-    return T.StructType.fromDDL(TABLE_DDL[name])
-
-
 # Per-session cache of resolved fixture-table DataFrame handles (r13
 # optimization).  Every ``spark.read.parquet`` pays a driver-side
 # resolution round (file listing + footer schema, ~100 ms measured), and
@@ -90,10 +86,13 @@ def table_schema(name: str) -> T.StructType:
 # scans the parquet files (scan splits and shuffle sizing are decided
 # per execution, so partition-invariance semantics are untouched).
 # Keyed weakly by session so test sessions drop their entries with the
-# session object; fixture dirs are immutable by contract (the driver's
-# testdata), which is what makes the resolved file-list snapshot safe
-# to reuse.  Handle aliasing across queries is the ordinary Spark
-# self-join case (DeduplicateRelations re-ids the duplicate side).
+# session object.  Within a session there is ONE entry per (absolute
+# dir, table), holding the handle with the freshness token it was
+# resolved under (see ``load_table``): a file rewritten in place
+# replaces its entry instead of adding one, so the cache stays bounded
+# by the number of tables read.  Handle aliasing across queries is the
+# ordinary Spark self-join case (DeduplicateRelations re-ids the
+# duplicate side).
 _TABLE_HANDLES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
@@ -127,22 +126,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         cache = {}
     # freshness token (r13 ADVICE): a fixture dir regenerated IN PLACE
     # mid-session (driver re-materializing testdata between rounds)
-    # must not be served a stale resolved file list — fold the parquet
-    # file's (mtime_ns, size) into the key so regeneration simply
-    # misses and re-resolves.  One os.stat per call (~µs) vs the
-    # ~100 ms resolution the cache saves.
+    # must not be served a stale resolved file list — the parquet
+    # file's (mtime_ns, size) is stored with the handle, so regeneration
+    # misses, re-resolves and replaces the entry.  One os.stat per call
+    # (~µs) vs the ~100 ms resolution the cache saves.
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         st = os.stat(path)
         token = (st.st_mtime_ns, st.st_size)
     except OSError:
         token = None
-    key = (os.path.abspath(sf_dir), name, token)
+    key = (os.path.abspath(sf_dir), name)
     cached = cache.get(key)
-    if cached is not None:
-        return cached
+    if cached is not None and cached[0] == token:
+        return cached[1]
     df = _load_table_uncached(spark, sf_dir, name)
-    cache[key] = df
+    cache[key] = (token, df)
     return df
 
 

@@ -54,10 +54,23 @@ def shingles_col(toks: Column, k: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingle_id(s: Column) -> Column:
+# The MinHash formulation, written once as Spark-SQL text (the rule
+# stated in compat.py): ``minhash_signature`` is ``F.expr`` over these
+# texts, ``minhash_signature_sql`` interpolates them.
+
+
+def _shingle_id_sql(s: str) -> str:
+    return f"CAST(conv(substring(sha2({s}, 256), 1, 8), 16, 10) AS BIGINT)"
+
+
+# min((a * __sid + b) % P) per hash function, over the projected id
+_MH_MINS_SQL = [f"min(({a} * __sid + {b}) % {MH_PRIME})" for a, b in MH_AB]
+
+
+def shingle_id(s: str) -> Column:
     """32-bit id from the first 8 hex chars of sha2-256 — DuckDB:
     ``cast(concat('0x', substr(sha256(s),1,8)) as bigint)``."""
-    return F.conv(F.substring(F.sha2(s, 256), 1, 8), 16, 10).cast("bigint")
+    return F.expr(_shingle_id_sql(s))
 
 
 def dedup_exact(
@@ -83,38 +96,26 @@ def minhash_signature(shingles: DataFrame, id_col: str = "doc_id") -> DataFrame:
     subexpression elimination does not reach across the 16 aggregate
     inputs — A/B-measured 0.92 s → 0.82 s on the sf0.1 signature
     stage, identical output)."""
-    pre = shingles.select(id_col, shingle_id(F.col("s")).alias("__sid"))
+    pre = shingles.select(id_col, shingle_id("s").alias("__sid"))
     return pre.groupBy(id_col).agg(
-        *[
-            F.min((F.lit(a) * F.col("__sid") + F.lit(b)) % F.lit(MH_PRIME)).alias(
-                f"mh{i}"
-            )
-            for i, (a, b) in enumerate(MH_AB)
-        ],
+        *[F.expr(m).alias(f"mh{i}") for i, m in enumerate(_MH_MINS_SQL)],
         F.count(F.lit(1)).alias("n_sh"),
     )
 
 
 def minhash_signature_sql(id_col: str = "doc_id") -> str:
-    """Spark-SQL text twin of ``minhash_signature`` with a ``{sh}``
+    """``minhash_signature`` as one statement, with a ``{sh}``
     placeholder for the shingle frame (``spark.sql(sql, sh=shingles)``).
 
-    Why a twin exists (r14, guide §7.3): the Column form eagerly
+    Why a statement form exists (r14, guide §7.3): the DataFrame form
     analyzes a growing plan per Dataset op — the 16 min() aggregate
     alone costs ~0.4 s of driver-side build per query at any scale —
-    while the SQL text is ONE parse + analysis (~60 ms).  Expressions
-    are written to analyze to the very same operators (same literals,
-    same projected ``__sid`` below the aggregate), so the executed
-    plan — and therefore the signature bits — are unchanged; the
-    snapshot harness and the DuckDB oracles gate that equivalence."""
-    mins = ", ".join(
-        f"min(({a} * __sid + {b}) % {MH_PRIME}) AS mh{i}"
-        for i, (a, b) in enumerate(MH_AB)
-    )
+    while the SQL text is ONE parse + analysis (~60 ms).  Both forms
+    use the same texts, so they run the same plan."""
+    mins = ", ".join(f"{m} AS mh{i}" for i, m in enumerate(_MH_MINS_SQL))
     return (
         f"SELECT {id_col}, {mins}, count(1) AS n_sh FROM ("
-        f"SELECT {id_col}, CAST(conv(substring(sha2(s, 256), 1, 8), 16, 10)"
-        " AS BIGINT) AS __sid FROM {sh}"
+        f"SELECT {id_col}, {_shingle_id_sql('s')} AS __sid FROM {{sh}}"
         f") GROUP BY {id_col}"
     )
 
@@ -222,26 +223,6 @@ def verified_jaccard(
         .where(F.col("jaccard") >= threshold)
         .select("d1", "d2", "jaccard")
     )
-
-
-def simhash_col_bits(tid: Column, n_bits: int = 16) -> list[Column]:
-    """±1 vote aggregates per bit of a token-id column (sum → sign)."""
-    return [
-        F.sum(F.when((tid.bitwiseAND(F.lit(1 << b))) != 0, 1).otherwise(-1)).alias(
-            f"w{b}"
-        )
-        for b in range(n_bits)
-    ]
-
-
-def pack_simhash(n_bits: int = 16) -> Column:
-    """Pack the w0..w{n-1} vote columns into one integer fingerprint."""
-    packed: Column | None = None
-    for b in range(n_bits):
-        term = F.when(F.col(f"w{b}") > 0, 1 << b).otherwise(0)
-        packed = term if packed is None else packed + term
-    assert packed is not None
-    return packed.cast("bigint")
 
 
 def ngram_jaccard_pairs(

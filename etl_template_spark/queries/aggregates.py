@@ -54,7 +54,7 @@ def q_agg_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stated as ONE SQL text (r14, guide §7.3): the eight fixed-point
     aggregate Columns cost ~0.25 s of eager per-op analysis per build;
     the SQL parses+analyzes once (~0.08 s) into the same plan — the
-    ``dsum_fp_sparksql`` twins emit the identical operator sequence,
+    sums are the ``compat`` texts the Column helpers also parse,
     snapshot- and oracle-gated."""
     from ..compat import davg_fp_sparksql as davg_s, dsum_fp_sparksql as dsum_s
 

@@ -206,7 +206,7 @@ def q_join_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    revenue = "l_extendedprice * (1 - l_discount)"
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -314,8 +314,8 @@ def q_join_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     per year per partition."""
     li = load_table(spark, sf_dir, "lineitem")
     pt = load_table(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo_rev = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(F.lit(0.0))
+    rev = "l_extendedprice * (1 - l_discount)"
+    promo_rev = f"CASE WHEN p_type LIKE 'PROMO%' THEN {rev} ELSE 0.0D END"
     return (
         li.join(pt, li.l_partkey == pt.p_partkey)
         .groupBy(F.year("l_shipdate").alias("ship_year"))

@@ -33,7 +33,6 @@ from ..operators.dedup import (
     MH_AB as _MH_AB,
     MH_BANDS as _MH_BANDS,
     MH_PRIME as _MH_P,
-    shingle_id,
     shingles_col,
     tokens_col,
     verified_jaccard as _verified_jaccard,
@@ -261,7 +260,7 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the compose would be silently dropped.  Cache substitution
     # happens at execution (useCachedData), so pinning here still puts
     # InMemoryTableScans under every consumer — plan-gated by
-    # tests/test_plans.py.  ORDER MATTERS (r14, measured): the
+    # tests/test_plans.py::test_cache_pins_substitute.  ORDER MATTERS (r14, measured): the
     # CacheManager normalizes a new cache entry's key against caches
     # that already exist, so persisting ``sh`` first would bake an
     # InMemoryRelation(sh) into ``mins``'s key and no raw consumer

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import persist_tracked
-from ..compat import davg, davg_sql, dsum, dsum_sql
+from ..compat import davg_sql, dsum_sql
 from ..io import load_table
 from ..registry import register
 
@@ -97,66 +97,15 @@ def _l2_frag(a: str, b: str, dim: int) -> str:
     return _dim_guard(acc, dim, a, b)
 
 
-def _dot_fold(a: Column, b: Column) -> Column:
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _sqn_fold(a: Column) -> Column:
-    return F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
-def dot_col(a: Column | str, b: Column | str, dim: int = _DIM) -> Column:
-    """Sequential double dot product of two fixed-``dim`` float vectors
-    (see the formulation note above; the fold consumes the full array,
-    so no dim guard is needed)."""
-    return _dot_fold(_c(a), _c(b))
-
-
-def sq_norm_col(a: Column | str, dim: int = _DIM) -> Column:
-    return _sqn_fold(_c(a))
-
-
-def cosine_col(a: Column | str, b: Column | str, dim: int = _DIM) -> Column:
-    """round(dot / sqrt(na*nb), 6) — formula mirrored verbatim in SQL."""
-    return F.round(
-        dot_col(a, b, dim) / F.sqrt(sq_norm_col(a, dim) * sq_norm_col(b, dim)), 6
-    )
-
-
-def cosine_pre_col(
-    a: Column | str, na: Column | str, b: Column | str, nb: Column | str
-) -> Column:
-    """Cosine with PRE-COMPUTED squared norms (r14 optimization):
-    ``round(dot(a,b) / sqrt(na * nb), 6)`` where ``na``/``nb`` are
-    columns holding ``sq_norm_col(a)`` / ``sq_norm_col(b)`` computed in
-    an upstream projection.  Bit-identical to ``cosine_col`` — the norm
-    folds produce the same doubles wherever they run, and the final
-    ``/ sqrt(na*nb)`` and round are the same IEEE ops — but the
-    per-PAIR work drops from three folds to one: a norm is per-ROW,
-    computed once and reused across every pair the row joins into
-    (A/B at sf0.1 assignment stage: 0.84-1.12 s → 0.40-0.51 s)."""
-    return F.round(_dot_fold(_c(a), _c(b)) / F.sqrt(_c(na) * _c(nb)), 6)
-
-
-# --- Spark-SQL text twins of the folds (r14, guide §7.3) -------------------
-# The benched similarity builders are stated as ONE parsed SQL statement
-# per pipeline stage instead of eagerly-analyzed Dataset ops (IVF build
-# was ~1.1 s, PQ ~0.8 s of driver-side analysis per call at any scale).
-# These emit the IDENTICAL expressions the Column folds analyze to —
-# same 0.0D seed, same cast/multiply order — so the executed plan and
-# every result bit are unchanged (snapshot- + oracle-gated).
+# Each fold below is written once, as Spark-SQL text (the rule stated
+# in compat.py): statement builders interpolate the text, and the
+# Column helpers are ``F.expr`` over it.  Arguments are SQL expressions
+# (column names, qualified names or literal-array text).
 
 
 def _dot_fold_sparksql(a: str, b: str) -> str:
+    """Sequential double dot product (the fold consumes the full array,
+    so no dim guard is needed)."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) *"
         f" CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
@@ -171,6 +120,8 @@ def _sqn_fold_sparksql(a: str) -> str:
 
 
 def _cos_fold_sparksql(a: str, b: str) -> str:
+    """round(dot / sqrt(na*nb), 6) — formula mirrored verbatim in the
+    DuckDB oracles (``_cos_sql``)."""
     return (
         f"round({_dot_fold_sparksql(a, b)} / "
         f"sqrt({_sqn_fold_sparksql(a)} * {_sqn_fold_sparksql(b)}), 6)"
@@ -178,7 +129,28 @@ def _cos_fold_sparksql(a: str, b: str) -> str:
 
 
 def _cos_pre_sparksql(a: str, na: str, b: str, nb: str) -> str:
+    """Cosine with PRE-COMPUTED squared norms (r14 optimization):
+    ``round(dot(a,b) / sqrt(na * nb), 6)`` where ``na``/``nb`` hold
+    ``sq_norm_col(a)`` / ``sq_norm_col(b)`` computed in an upstream
+    projection.  Bit-identical to ``cosine_col`` — the norm folds
+    produce the same doubles wherever they run, and the final
+    ``/ sqrt(na*nb)`` and round are the same IEEE ops — but the
+    per-PAIR work drops from three folds to one: a norm is per-ROW,
+    computed once and reused across every pair the row joins into
+    (A/B at sf0.1 assignment stage: 0.84-1.12 s → 0.40-0.51 s)."""
     return f"round({_dot_fold_sparksql(a, b)} / sqrt({na} * {nb}), 6)"
+
+
+def sq_norm_col(a: str) -> Column:
+    return F.expr(_sqn_fold_sparksql(a))
+
+
+def cosine_col(a: str, b: str) -> Column:
+    return F.expr(_cos_fold_sparksql(a, b))
+
+
+def cosine_pre_col(a: str, na: str, b: str, nb: str) -> Column:
+    return F.expr(_cos_pre_sparksql(a, na, b, nb))
 
 
 def _dot_sql(a: str, b: str, dim: int = _DIM) -> str:
@@ -199,8 +171,8 @@ def _cos_sql(a: str, b: str, dim: int = _DIM) -> str:
 
 
 def _l2_sql(a: str, b: str, dim: int) -> str:
-    """DuckDB squared-L2 as the identical sequential double fold that
-    ``_l2_col`` states in Spark."""
+    """DuckDB squared-L2 as the identical sequential double chain that
+    ``_l2_frag`` states in Spark."""
     term = f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
     return (
         f"list_reduce(list_transform(range(1, {dim + 1}), "
@@ -236,7 +208,7 @@ def q_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1-row broadcast frame instead of per corpus row; corpus norm in
     # the scan projection) — the scoring expression is one fold-dot
     # instead of three folds, same bits (see cosine_pre_col).  Stated
-    # as ONE SQL text (see the fold-twin note above).
+    # as ONE SQL text: one parse and analysis per build.
     return spark.sql(
         f"""
         SELECT /*+ BROADCAST(q) */ v.vec_id, v.label,
@@ -277,19 +249,21 @@ def _plane(j: int) -> list[float]:
 def _bucket_col(vec: str) -> Column:
     """LSH bucket id: sign bit per hyperplane, packed into an int.
 
-    Plane dots are ``dot_col`` folds against literal coefficient
-    arrays (the same left-associated ``0.0``-seeded chain, so the sign
-    — and therefore the bucket — is unchanged).  r14: reverted from
-    the r13 unrolled fragment — 6 planes × 64 terms in one projection
-    is far past the JIT method limit, so the unroll ran as interpreted
-    bytecode, slower than the fold it replaced (see the formulation
-    note at the top of this module)."""
-    bucket = F.lit(0)
+    Plane dots are ``_dot_fold_sparksql`` folds against literal
+    coefficient arrays (the same left-associated ``0.0``-seeded chain,
+    so the sign — and therefore the bucket — is unchanged).  The
+    coefficients are ``D``-suffixed: Spark reads a bare ``0.123`` as
+    DECIMAL, and the exact binary fractions round-trip through
+    ``repr``.  r14: reverted from the r13 unrolled fragment — 6 planes
+    × 64 terms in one projection is far past the JIT method limit, so
+    the unroll ran as interpreted bytecode, slower than the fold it
+    replaced (see the formulation note at the top of this module)."""
+    bucket = "0"
     for j in range(_N_PLANES):
-        plane = F.array(*[F.lit(c) for c in _plane(j)])
-        d = dot_col(F.col(vec), plane)
-        bucket = bucket + F.when(d >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return bucket
+        plane = "array(" + ", ".join(f"{c!r}D" for c in _plane(j)) + ")"
+        d = _dot_fold_sparksql(vec, plane)
+        bucket = f"({bucket} + CASE WHEN {d} >= 0 THEN {1 << j} ELSE 0 END)"
+    return F.expr(bucket)
 
 
 def _plane_dot_sql(j: int, vec: str = "embedding") -> str:
@@ -541,23 +515,27 @@ def _ivf_centroids(e: DataFrame) -> DataFrame:
     return _per_dim_means(assigned, ["cell"], "embedding")
 
 
+# The Lloyd-mean steps: explode to (pos, x), compat.davg per dimension,
+# then the positional reassembly
+_EXPLODE_SQL = "posexplode({}) AS (pos, x)"
+_DIM_MEAN_SQL = davg_sql("CAST(x AS DOUBLE)")
+_CENTROID_SQL = "transform(array_sort(collect_list(struct(pos, m))), st -> st.m)"
+
+
 def _per_dim_means(
     assigned: DataFrame, keys: list[str], vec: str
 ) -> DataFrame:
     """(keys..., centroid array<double>): per-dimension decimal-exact
     Lloyd means (``compat.davg`` — summation order cannot change the
-    centroid), shared by the IVF coarse quantizer, the PQ codebooks and
-    ``operators.ann.train_centroids``."""
+    centroid), shared by the IVF coarse quantizer and
+    ``operators.ann.train_centroids``; the statement form is
+    ``_per_dim_means_sparksql``."""
     return (
-        assigned.select(*keys, F.posexplode(vec).alias("pos", "x"))
+        assigned.select(*keys, F.expr(_EXPLODE_SQL.format(vec)))
         .groupBy(*keys, "pos")
-        .agg(davg(F.col("x").cast("double")).alias("m"))
+        .agg(F.expr(_DIM_MEAN_SQL).alias("m"))
         .groupBy(*keys)
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select(
-            *keys,
-            F.transform("pm", lambda st: st.getField("m")).alias("centroid"),
-        )
+        .agg(F.expr(_CENTROID_SQL).alias("centroid"))
     )
 
 
@@ -569,13 +547,13 @@ def _assign_cells(vecs: DataFrame, centroids: DataFrame, n: int = 1) -> DataFram
     plain HashAggregate whose GROUPING KEY carries the payload columns
     (constant per vec_id, so the grouping is unchanged — see below).
     n>1 (the tiny query-side multiprobe) keeps the windowed top-n, and
-    deliberately keeps the FOLD cosine (Column form): its input is a
+    deliberately keeps the three-fold cosine: its input is a
     bounded frame (1 probe × k centroids), where a fresh codegen
     compile of the unrolled cosine costs more than interpreting k rows
     at any scale."""
     if n > 1:
         scored = vecs.crossJoin(F.broadcast(centroids)).withColumn(
-            "cdist", cosine_col(F.col("embedding"), F.col("centroid"))
+            "cdist", cosine_col("embedding", "centroid")
         )
         w = Window.partitionBy("vec_id").orderBy(
             F.col("cdist").desc(), F.col("cell")
@@ -627,19 +605,9 @@ def _assign_cells(vecs: DataFrame, centroids: DataFrame, n: int = 1) -> DataFram
             "cdist", cosine_pre_col("embedding", "__vn", "centroid", "__cn")
         )
     )
-    n_enc = F.when(
-        F.isnan(F.col("cdist")), F.lit(-1000001)
-    ).otherwise(
-        F.when(
-            F.col("cdist") >= 0, F.floor(F.col("cdist") * 1e6 + F.lit(0.5))
-        ).otherwise(-F.floor(-F.col("cdist") * 1e6 + F.lit(0.5)))
-    )
-    enc = (F.lit(1000001) - n_enc).cast("long") * F.lit(1 << 31) + F.col(
-        "cell"
-    ).cast("long")
     return (
         scored.groupBy(*vecs.columns)
-        .agg(F.min(enc).alias("__b"))
+        .agg(F.expr(_argmax_enc_sparksql()).alias("__b"))
         .select(
             *vecs.columns,
             (F.col("__b") % F.lit(1 << 31))
@@ -696,16 +664,14 @@ def _ivf_oracle() -> str:
     """
 
 
-# SQL-text twins of _assign_cells(n=1)/_per_dim_means for the benched
-# IVF builder (r14 build-cost move — see the fold-twin note; ann.py and
-# semdedup.py keep the Column helpers).  Emits the same long-packed
-# argmax over the same pre-normed cosine as the Column path.
+# The quantizer steps as text, shared by the statement-built IVF/PQ
+# builders and the Column helpers ``_assign_cells``/``_per_dim_means``
+# (which ann.py and semdedup.py call).
 
 
 def _argmax_enc_sparksql() -> str:
-    """The r13/r14 long-packed argmax over (cdist, cell) columns —
-    identical CASE/FLOOR/packing expressions to _assign_cells' n=1
-    path."""
+    """The r13/r14 long-packed argmax over (cdist, cell) columns (see
+    ``_assign_cells``)."""
     n_enc = (
         "CASE WHEN isnan(cdist) THEN -1000001 ELSE"
         " CASE WHEN cdist >= 0"
@@ -716,15 +682,11 @@ def _argmax_enc_sparksql() -> str:
 
 
 def _per_dim_means_sparksql(keys: str, src: str, vec: str = "embedding") -> str:
-    """compat.davg per dimension per key — same posexplode + decimal
-    mean + array_sort(collect_list(struct)) reassembly as
-    _per_dim_means."""
-    m = davg_sql("CAST(x AS DOUBLE)")
+    """``_per_dim_means`` as a statement over the relation text ``src``."""
     return f"""
-  SELECT {keys}, transform(array_sort(collect_list(struct(pos, m))),
-                           st -> st.m) AS centroid
-  FROM (SELECT {keys}, pos, {m} AS m
-        FROM (SELECT {keys}, posexplode({vec}) AS (pos, x) FROM {src})
+  SELECT {keys}, {_CENTROID_SQL} AS centroid
+  FROM (SELECT {keys}, pos, {_DIM_MEAN_SQL} AS m
+        FROM (SELECT {keys}, {_EXPLODE_SQL.format(vec)} FROM {src})
         GROUP BY {keys}, pos)
   GROUP BY {keys}"""
 
@@ -843,77 +805,6 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_M = 4        # subspaces (64-dim → 4 × 16-dim subvectors)
 _PQ_K = 32       # codes per subspace → 4 bytes/vector vs 256 raw (64×)
 _PQ_RERANK = 200  # exact-rerank pool (the recall/latency knob)
-
-
-def _pq_subvectors(e: DataFrame, dim: int = 64) -> DataFrame:
-    """(vec_id, label, s, sub): each vector split into _PQ_M slices."""
-    width = dim // _PQ_M
-    return e.select(
-        "vec_id",
-        "label",
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice("embedding", s * width + 1, width)
-                    for s in range(_PQ_M)
-                ]
-            )
-        ).alias("s", "sub"),
-    )
-
-
-def _l2_col(a: Column | str, b: Column | str, dim: int = _DIM) -> Column:
-    """Squared L2 as the same sequential double chain ``_l2_sql`` states
-    (unrolled + JVM-parsed on the string path — see ``dot_col``)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_l2_frag(a, b, dim))
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _pq_codebooks(sub: DataFrame) -> DataFrame:
-    """(s, cell, centroid): per-subspace codebook — deterministic seeds
-    (vec_id 0.._PQ_K-1) + one Lloyd refinement, the same distributed
-    recipe as the IVF coarse quantizer (broadcast-assign, groupBy
-    means; no driver loops).  Means are ``compat.davg`` (decimal-exact,
-    summation-order-independent) so the codebook is bit-reproducible
-    and statable in the DuckDB oracle."""
-    seeds = sub.where(F.col("vec_id") < _PQ_K).select(
-        "s", F.col("vec_id").alias("cell"), F.col("sub").alias("centroid")
-    )
-    assigned = _pq_assign(sub, seeds)
-    return _per_dim_means(
-        assigned.join(sub.select("vec_id", "s", "sub"), ["vec_id", "s"]),
-        ["s", "cell"],
-        "sub",
-    )
-
-
-def _pq_assign(sub: DataFrame, codebooks: DataFrame) -> DataFrame:
-    """(vec_id, s, cell): nearest codebook entry per subvector (L2,
-    deterministic cell-id tiebreak); codebooks broadcast.
-
-    argmin as ``min(struct(d2, cell)).cell`` — structs order
-    lexicographically, so the minimum IS (smallest distance, smallest
-    cell on ties).  A hash aggregate partial-combines map-side and
-    never sorts; the row_number-window formulation costs a full
-    (vec_id, s) shuffle-sort for the same answer."""
-    scored = sub.join(F.broadcast(codebooks), "s").withColumn(
-        "__d2", _l2_col("sub", "centroid", _DIM // _PQ_M)
-    )
-    return (
-        scored.groupBy("vec_id", "s")
-        .agg(F.min(F.struct(F.col("__d2"), F.col("cell"))).alias("__b"))
-        .select("vec_id", "s", F.col("__b.cell").alias("cell"))
-    )
 
 
 def _pq_oracle() -> str:

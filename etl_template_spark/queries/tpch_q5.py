@@ -106,7 +106,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_nationkey") == F.col("n_nationkey"),
         "semi",
     )
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    revenue = "l_extendedprice * (1 - l_discount)"
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)

@@ -61,7 +61,7 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
     o = load_table(spark, sf_dir, "orders").where(F.col("o_orderdate") < cutoff)
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > cutoff)
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    revenue = "l_extendedprice * (1 - l_discount)"
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)
@@ -210,7 +210,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair = (
         (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    revenue = "l_extendedprice * (1 - l_discount)"
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -260,7 +260,7 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
     )
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    revenue = "l_extendedprice * (1 - l_discount)"
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)

@@ -32,14 +32,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # the driver benches or verifies against, in the same required suite.
 # (The env-pinned SF_DIR is kept in the list so an explicitly pointed
 # run still covers whatever the driver pointed at.)
-_FIXTURE_ROOT = os.path.dirname(SF_DIR.rstrip("/")) or "/root/testdata"
+_FIXTURE_ROOT = os.path.dirname(os.path.abspath(SF_DIR))
 SF_DIRS = sorted(
     {
         p
         for p in glob.glob(os.path.join(_FIXTURE_ROOT, "sf*"))
         if os.path.isdir(p) and glob.glob(os.path.join(p, "*.parquet"))
     }
-    | {SF_DIR}
+    | {os.path.abspath(SF_DIR)}
 )
 
 
@@ -283,18 +283,15 @@ def test_fixed_point_money_agreement(spark, sf_dir):
     ``sign(x)·floor(|x|·1e6 + 0.5)`` must equal the unscaled value of
     Spark's shortest-repr double→decimal(30,6) cast on EVERY value in
     the fixtures — swept over EVERY fixture SF dir (r14 ADVICE), so a
-    driver-regenerated fixture at any scale trips the gate.  A single
-    divergent value here means the fast twins would no longer be
+    driver-regenerated fixture at any scale trips the gate.  The fast
+    side is ``compat.fp6`` itself, the expression the queries run.  A
+    single divergent value here means the fast twins would no longer be
     bit-identical to dsum/davg — move the affected call sites back to
     the decimal path before shipping."""
     from pyspark.sql import functions as F
 
+    from etl_template_spark.compat import fp6
     from etl_template_spark.io import load_table
-
-    def fast(c):
-        return F.when(c >= 0, F.floor(c * 1e6 + F.lit(0.5))).otherwise(
-            -F.floor(-c * 1e6 + F.lit(0.5))
-        ).cast("long")
 
     def exact(c):
         return (c.cast("decimal(30,6)") * 1000000).cast("long")
@@ -320,7 +317,7 @@ def test_fixed_point_money_agreement(spark, sf_dir):
             bad = (
                 df.select(x.alias("__x"))
                 .where(F.col("__x").isNotNull())
-                .where(fast(F.col("__x")) != exact(F.col("__x")))
+                .where(fp6("__x") != exact(F.col("__x")))
                 .limit(3)
                 .collect()
             )

@@ -62,14 +62,24 @@ def test_every_write_creates_next_immutable_version(spark, tmp_path):
 
 def test_interop_with_jvm_versioned_writer(spark, sf_dir, tmp_path):
     """A version committed by the JVM parquet path (write_versioned) is
-    readable through the connector and vice versa — same layout."""
+    readable through the connector and vice versa — same layout.  The
+    JVM writer stores timestamps as INT96; the connector must scan them
+    back as the same instants, not just count rows."""
     root = str(tmp_path)
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).limit(50)
+    orders = (
+        spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+        .orderBy("o_orderkey")
+        .limit(50)
+        .withColumn("ts", F.col("o_orderdate").cast("timestamp"))
+    )
     write_versioned(orders, root, "orders_step")
     back = (
         spark.read.format(FORMAT_NAME).option("step", "orders_step").load(root)
     )
     assert back.count() == 50
+    got = sorted((r["o_orderkey"], r["ts"]) for r in back.select("o_orderkey", "ts").collect())
+    want = sorted((r["o_orderkey"], r["ts"]) for r in orders.select("o_orderkey", "ts").collect())
+    assert got == want
     # connector-committed version readable by plain parquet scan
     _seed(spark, root, step="py_step", n=5)
     v = latest_version(root, "py_step")

@@ -606,6 +606,25 @@ def test_load_table_events_handles_both_timestamp_generations(spark, tmp_path):
     assert got_ts == ts
 
 
+def test_load_table_handle_cache_replaces_rewritten_table(spark, tmp_path):
+    """A table file rewritten in place is re-resolved, and its cached
+    handle is REPLACED, not added beside the stale one: the cache holds
+    one entry per (dir, table) however often the file changes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_template_spark.io import _TABLE_HANDLES
+
+    d = str(tmp_path)
+    path = os.path.join(d, "region.parquet")
+    for n in (1, 2, 3):
+        pq.write_table(pa.table({"r_regionkey": list(range(n))}), path)
+        os.utime(path, ns=(n * 10**9, n * 10**9))  # distinct token per rewrite
+        assert load_table(spark, d, "region").count() == n
+    keys = [k for k in _TABLE_HANDLES[spark] if k[0] == os.path.abspath(d)]
+    assert keys == [(os.path.abspath(d), "region")]
+
+
 def test_diff_versions_library_api(spark, tmp_path):
     """io.diff_versions over hand-built versions: added/removed/changed
     classification, NULL-safe value comparison (a change to/from NULL

@@ -787,3 +787,29 @@ def test_shingle_build_single_shuffle_feeds_minhash(spark, sf_dir):
     sh = _doc_shingles(spark, sf_dir, k=3)  # no persist: lineage visible
     p = minhash_signature(sh)._jdf.queryExecution().explainString(mode)
     assert node_count(p, "Exchange") == 1
+
+
+@pytest.mark.parametrize(
+    "name, scans",
+    [
+        ("q_dedup_fuzzy", 6),  # mins, sh
+        ("q_dedup_ngram", 4),  # kept, sh
+        ("q_sim_search_ivf", 2),  # centroids
+        ("q_sim_search_pq", 4),  # sub, books
+    ],
+)
+def test_cache_pins_substitute(spark, sf_dir, name, scans):
+    """Every pin a builder takes must be READ back from the cache.  A pin
+    taken before its templated ``spark.sql`` is silently dropped by the
+    formatter's temp-view cleanup (see llm_text.q_dedup_fuzzy), and a pin
+    taken in the wrong order never matches its consumers: either shows
+    only as missing InMemoryTableScans, never as wrong rows."""
+    from etl_template_spark.caching import release_tracked
+
+    release_tracked()
+    spark.catalog.clearCache()
+    try:
+        assert node_count(plan_of(spark, sf_dir, name), "InMemoryTableScan") == scans
+    finally:
+        release_tracked()
+        spark.catalog.clearCache()

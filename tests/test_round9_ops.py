@@ -648,12 +648,8 @@ def test_ivf_search_equals_brute_force_over_probed_cells(spark, sf_dir, tmp_path
     qv = q.collect()[0]["embedding"]
     brute = (
         merged.where(F.col("cell").isin(*probed))
-        .select(
-            "vec_id",
-            cosine_col(
-                F.col("embedding"), F.array(*[F.lit(float(x)) for x in qv])
-            ).alias("cos_sim"),
-        )
+        .withColumn("qv", F.array(*[F.lit(float(x)) for x in qv]))
+        .select("vec_id", cosine_col("embedding", "qv").alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(10)
         .collect()
