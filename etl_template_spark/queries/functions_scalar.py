@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..compat import dec
 from ..io import load_table
 from ..registry import register
 
@@ -135,9 +136,7 @@ def q_fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.select(
         "l_orderkey",
         "l_linenumber",
-        F.round(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(30,6)"), 2
-        )
+        F.round(dec("l_extendedprice * (1 - l_discount)"), 2)
         .cast("double")
         .alias("net_price"),
         F.abs(F.col("l_discount") - 0.05).alias("disc_dev"),

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..compat import dsum
+from ..compat import dec, dsum
 from ..io import load_table
 from ..registry import register
 
@@ -77,9 +77,7 @@ def q_rolling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # dsum is a grouped aggregate; the WINDOW applies the same decimal
     # discipline inline (sum of decimal casts, cast back to double)
-    roll_sum = (
-        F.sum(F.col("spend").cast("decimal(30,6)")).over(w).cast("double")
-    )
+    roll_sum = F.sum(dec("spend")).over(w).cast("double")
     roll_n = F.count(F.lit(1)).over(w).cast("bigint")
     return daily.select(
         "o_custkey",

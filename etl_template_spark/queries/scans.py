@@ -17,6 +17,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..compat import dec
 from ..io import load_table, read_csv, read_jsonl, read_versioned, write_versioned
 from ..registry import register
 
@@ -381,7 +382,7 @@ def q_scan_versioned_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_versioned(
         sup.withColumn(
             "acctbal_eur",
-            F.round(F.col("s_acctbal").cast("decimal(30,6)") * F.lit("0.9").cast("decimal(3,1)"), 2).cast("double"),
+            F.round(dec("s_acctbal") * F.lit("0.9").cast("decimal(3,1)"), 2).cast("double"),
         ),
         root,
         "suppliers",

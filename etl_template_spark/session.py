@@ -18,6 +18,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+# RocksDB state store (SURVEY §4.3): streaming state spills to local disk
+# with bounded executor memory instead of living whole in the HDFS-backed
+# store's heap map — the difference between a job and an OOM once
+# session/dedup/retention state reaches 100 TB-scale keyspaces.
+# Changelog checkpointing uploads per-batch deltas, not full snapshots.
+# The provider and its changelog conf are an inseparable pair: get_spark
+# applies it (inert for batch queries); a session the engine did not
+# create opts in before starting a query:
+#   for k, v in ROCKSDB_STATE_CONF.items(): spark.conf.set(k, v)
+ROCKSDB_STATE_CONF = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+}
+
+
 def _default_shuffle_partitions() -> int:
     # read per-call, not at import (r10 review): get_spark reads
     # SPARK_GRAFT_CPUS per call for local[N], so an env var set after
@@ -84,24 +101,7 @@ def get_spark(
         # retained: creation side must be small enough to aggregate
         # cheaply, probe side big enough to be worth it.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        # RocksDB state store (SURVEY §4.3): streaming state spills to
-        # local disk with bounded executor memory instead of living
-        # whole in the HDFS-backed store's heap map — the difference
-        # between a job and an OOM once session/dedup/retention state
-        # reaches 100 TB-scale keyspaces.  Changelog checkpointing
-        # uploads per-batch deltas, not full snapshots.  Inert for
-        # batch queries; streaming/jobs.py::ROCKSDB_STATE_CONF carries
-        # the same pair for sessions the engine did not create.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        .config(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
+        .config(map=ROCKSDB_STATE_CONF)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -124,9 +124,8 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     reconciler runs on sessions the engine did not create and knows
     nothing about.  Provider choice belongs to session creation
     (``get_spark``) or to an explicit opt-in at stream start
-    (``streaming/jobs.py::ROCKSDB_STATE_CONF``, which carries the
-    provider AND its changelog-checkpointing conf as an inseparable
-    pair).  (r5 ADVICE)
+    (``ROCKSDB_STATE_CONF``, which carries the provider AND its
+    changelog-checkpointing conf as an inseparable pair).  (r5 ADVICE)
     """
     for key, value in (
         ("spark.sql.session.timeZone", "UTC"),

@@ -28,17 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-# RocksDB state store: the scale path for streaming state.  The default
-# HDFS-backed store keeps every key in executor heap — fine for small
-# keyspaces, an OOM at 100 TB-scale session/dedup state.  RocksDB spills
-# to local disk with bounded memory.  Set before starting a query:
-#   for k, v in ROCKSDB_STATE_CONF.items(): spark.conf.set(k, v)
-ROCKSDB_STATE_CONF = {
-    "spark.sql.streaming.stateStore.providerClass": (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    ),
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-}
+# defined once beside the session factory; re-exported for callers that
+# opt a session the engine did not create into the RocksDB state store
+from ..session import ROCKSDB_STATE_CONF  # noqa: F401
 
 # explicit StructType (NOT fromDDL, which parses via a live SparkSession
 # and would make this module un-importable session-free)
@@ -190,65 +182,6 @@ def running_totals_stream(
             stateStructType="n bigint, s double",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def running_totals_tws_stream(
-    events: DataFrame, watermark: str = "1 hour", state_ttl_ms: int | None = None
-) -> DataFrame:
-    """``running_totals_stream`` on the Spark 4 ``transformWithState``
-    API: named TYPED state variables (ValueState here; ListState/
-    MapState available), per-key timers, and optional state TTL — the
-    successor to ``applyInPandasWithState``'s single untyped tuple.
-
-    TTL is the 100 TB lever the old API lacks: idle keys age out of the
-    store automatically instead of growing it forever.  Requires the
-    RocksDB state store provider (``ROCKSDB_STATE_CONF``).
-
-    Runtime gate: Spark's transformWithState Python workers speak
-    protobuf to the state server; in environments without
-    ``google.protobuf`` the query fails at stream start (plan
-    construction is fine).  ``applyInPandasWithState``
-    (``running_totals_stream``) is the dependency-free fallback."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n bigint, s double", ttlDurationMs=state_ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].fillna(0.0).sum())
-            self._totals.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_Totals(),
-            outputStructType="user_id bigint, n_events bigint, sum_value double",
-            outputMode="Update",
-            # TTL'd state REQUIRES a time mode (r10 review: the
-            # hardcoded "None" made Spark's handle validation reject
-            # the ttlDurationMs at stream start — the documented TTL
-            # path could never run); same conditional as the sibling
-            # tws operators
-            timeMode="ProcessingTime" if state_ttl_ms is not None else "None",
         )
     )
 
@@ -507,16 +440,12 @@ def _duration_ms(duration: str) -> int:
 
 def funnel_fold(state_triple, rows_df):
     """The per-user monotone funnel transition (view → click →
-    purchase), factored out of ``funnel_stream`` AND
-    ``funnel_tws_stream`` so both carry ONE stage machine (the
-    attribution_fold pattern, r10 review — the fold was previously
-    duplicated verbatim and a tie-rule fix to one copy would silently
-    diverge the other; this is also the protobuf-free unit-test seam
-    for the tws variant).  Given the carried (t_view, t_click,
-    t_purchase) and one micro-batch pandas frame of this user's rows,
-    return the advanced triple: batch rows fold in event-time order,
-    stages never regress, and each stage timestamp must be STRICTLY
-    after its predecessor's."""
+    purchase) that ``funnel_stream`` applies per micro-batch, factored
+    out so the stage machine is unit-testable without a running stream.
+    Given the carried (t_view, t_click, t_purchase) and one micro-batch
+    pandas frame of this user's rows, return the advanced triple: batch
+    rows fold in event-time order, stages never regress, and each stage
+    timestamp must be STRICTLY after its predecessor's."""
     tv, tc, tp = state_triple
     if len(rows_df):
         srt = rows_df.sort_values("ts")
@@ -599,106 +528,6 @@ def funnel_stream(
                 if ttl_ms is not None
                 else GroupStateTimeout.NoTimeout
             ),
-        )
-    )
-
-
-def funnel_tws_stream(
-    events: DataFrame,
-    watermark: str = "1 hour",
-    idle_ttl: str | None = None,
-) -> DataFrame:
-    """``funnel_stream`` on the Spark 4 ``transformWithState`` API:
-    the same view→click→purchase monotone stage machine, with the state
-    as a named TYPED ValueState and idle eviction as an explicit per-key
-    processing-time TIMER instead of the old API's blanket
-    ``setTimeoutDuration``.
-
-    Why timers beat the old timeout for this operator: the timer is a
-    first-class, inspectable piece of state (``listTimers``), it re-arms
-    per key on every update (`registerTimer` after `deleteTimer` — one
-    live timer per key, so eviction fires exactly ``idle_ttl`` after the
-    LAST event), and expiry runs a dedicated ``handleExpiredTimer``
-    callback that can clean up MULTIPLE state variables atomically —
-    the shape every session-like operator needs once state stops being
-    one tuple.  Eviction CLEARS the funnel rather than emitting a
-    tombstone: a returning evicted user restarts at stage 1, identical
-    to ``funnel_stream``'s TTL contract (test_streaming proves eviction
-    shrinks the RocksDB store for the old API; this one follows the
-    same protocol).
-
-    At 100 TB-scale streams: state is three timestamps + one timer per
-    user key in RocksDB (``ROCKSDB_STATE_CONF``), output is Update-mode
-    deltas, and timer expiry batches by key-group — no scan of the full
-    store.  Runtime gate (same as ``running_totals_tws_stream``): the
-    transformWithState Python workers need ``google.protobuf``; plan
-    construction is dependency-free and ``funnel_stream`` is the
-    fallback with identical semantics."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    ttl_ms = _duration_ms(idle_ttl) if idle_ttl is not None else None
-
-    class _Funnel(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._funnel = handle.getValueState(
-                "funnel", "tv timestamp, tc timestamp, tp timestamp"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            tv, tc, tp = (
-                self._funnel.get() if self._funnel.exists() else (None, None, None)
-            )
-            pdfs = list(rows)
-            batch = pd.concat(pdfs) if pdfs else pd.DataFrame()
-            # the ONE shared stage machine (funnel_fold) — semantics
-            # identical to funnel_stream by construction, not by copy
-            tv, tc, tp = funnel_fold((tv, tc, tp), batch)
-            self._funnel.update((tv, tc, tp))
-            if ttl_ms is not None:
-                # exactly one live timer per key, re-armed on every
-                # update so it fires idle_ttl after the LAST event
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-                self._handle.registerTimer(
-                    timerValues.getCurrentProcessingTimeInMs() + ttl_ms
-                )
-            if tv is not None:
-                stage = 3 if tp is not None else (2 if tc is not None else 1)
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "t_view": [tv],
-                        "t_click": [tc],
-                        "t_purchase": [tp],
-                        "stage": [stage],
-                    }
-                )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # idle eviction: drop the funnel state (the timer that fired
-            # is already consumed); a returning user restarts at stage 1
-            self._funnel.clear()
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_Funnel(),
-            outputStructType=(
-                "user_id bigint, t_view timestamp, t_click timestamp, "
-                "t_purchase timestamp, stage int"
-            ),
-            outputMode="Update",
-            timeMode="ProcessingTime" if ttl_ms is not None else "None",
         )
     )
 
@@ -908,518 +737,4 @@ def distinct_users_stream(
             F.count(F.lit(1)).alias("n_events"),
         )
         .select(F.col("w.start").alias("win_start"), "n_users", "n_events")
-    )
-
-
-ATTRIBUTION_TOUCH_TYPES = ("click", "view", "signup")
-
-
-def attribution_fold(user_id, touches, rows, window_ms, slack_ms=0):
-    """The per-key attribution transition function, factored out of the
-    streaming processor so its semantics are unit-testable without the
-    transformWithState Python workers (which need google.protobuf):
-    given the carried touch list and one micro-batch of this user's
-    rows, return (credit rows, pruned touch list).  Rows fold in
-    (ts, touches-before-purchases, event_id) order: the batch twin's
-    lookback bound is INCLUSIVE (``touch.ts <= purchase.ts``), so a
-    same-instant touch must be visible to the purchase regardless of
-    event-id order — the tie rule that makes stream and batch agree.
-    Credit rows are (event_id, user_id, channel, share, n_touches).
-
-    Pruning (r7 ADVICE): the returned touch list is pruned at
-    ``max_batch_ts - window_ms - slack_ms``.  The slack term exists
-    because a purchase may arrive in a LATER micro-batch with an
-    EARLIER event time — anything the stream's watermark admits — and
-    its lookback ``[ts - window, ts]`` must still see every touch it
-    would have seen in the batch query.  The watermark guarantees any
-    future-admitted row has ``ts >= max_global_ts - delay``, and this
-    key's ``max_batch_ts <= max_global_ts``, so a cutoff of
-    ``max_batch_ts - window - delay`` can never drop a touch a
-    still-admissible purchase could credit: pruning is lossless iff
-    ``slack_ms`` covers the watermark delay.  With ``slack_ms=0`` the
-    prune is lossless only for streams whose purchases never arrive
-    event-time-late across a batch boundary."""
-    import pandas as pd
-
-    out = []
-    max_ts = None
-    ordered = sorted(rows, key=lambda r: (r[1], r[2] == "purchase", r[0]))
-    for event_id, ts, et, value in ordered:
-        max_ts = ts if max_ts is None or ts > max_ts else max_ts
-        if et in ATTRIBUTION_TOUCH_TYPES:
-            touches.append((ts, et))
-        elif et == "purchase":
-            lo = ts - pd.Timedelta(milliseconds=window_ms)
-            hits = [c for (t, c) in touches if lo <= t <= ts]
-            credits = hits or ["direct"]
-            share = value / len(credits)
-            uid = int(user_id) if user_id is not None else None
-            for ch in credits:
-                out.append((int(event_id), uid, ch, share, len(hits)))
-    if max_ts is not None:
-        cutoff = max_ts - pd.Timedelta(milliseconds=window_ms + slack_ms)
-        touches = [(t, c) for (t, c) in touches if t >= cutoff]
-    return out, touches
-
-
-def attribution_tws_stream(
-    events: DataFrame,
-    watermark: str = "1 hour",
-    window_days: int = 7,
-    idle_ttl: str | None = None,
-) -> DataFrame:
-    """Streaming linear multi-touch attribution: the incremental twin of
-    ``q_attribution_linear`` (queries/attribution.py) on the Spark 4
-    ``transformWithState`` API.
-
-    Per user key the state is a ListState of (ts, channel) touches.
-    Each purchase reads the list, keeps the touches inside the lookback
-    window (``touch.ts`` in ``[purchase.ts - window_days, purchase.ts]``,
-    inclusive — identical bounds to the batch query), and emits one
-    credit row per in-window touch with ``share = value / n`` — or a
-    single full-value ``direct`` credit when no touch qualifies.  Rows
-    within a micro-batch fold in (ts, event_id) order, so a same-batch
-    touch-then-purchase sequence attributes exactly as the batch join
-    does.
-
-    The eviction story is the point: the watermark bounds how
-    event-time-late a future purchase can arrive, so a touch older than
-    ``lookback + watermark-delay`` below the key's max seen ts can
-    NEVER earn credit again.  Pruning the list at
-    ``max_seen_ts - window_days - watermark_delay`` (on every update,
-    via ``attribution_fold``'s ``slack_ms``) and idle-evicting whole
-    keys after ``idle_ttl >= window_days + watermark-delay`` of silence
-    are therefore SEMANTICS-PRESERVING — state stays bounded by each
-    user's ``7-day + delay`` touch volume, and the stream equals the
-    batch query over any backlog whose lateness the watermark admits
-    (test_streaming proves it across micro-batches, including a
-    late-arriving purchase whose lookback reaches slack-retained
-    touches).  That is the property that makes this runnable forever on
-    an unbounded stream: the operator's correctness window IS its
-    state-retention window.  (Without the slack term — the r7 ADVICE
-    bug — a purchase arriving in a later micro-batch with an earlier
-    event time could find its touches already pruned and silently fall
-    back to 'direct'.)
-
-    Stream-vs-batch caveat (inherent to Append-mode credits): a touch
-    that ARRIVES in a later micro-batch than a same-or-later-timestamp
-    purchase cannot credit it retroactively — the credit row is already
-    emitted.  Within any one micro-batch the fold's tie-aware total
-    order (attribution_fold) makes same-instant touch+purchase agree
-    with the batch twin; across batches the watermark is the lateness
-    budget, exactly as for the window aggregates.
-
-    At scale: RocksDB list state (``ROCKSDB_STATE_CONF``), Append-mode
-    credit deltas keyed by purchase event_id — a downstream stateless
-    per-channel rollup (or the versioned sink) consumes them without
-    reprocessing history.  Runtime gate as the other tws ops: the
-    Python workers need ``google.protobuf``; plan construction is
-    dependency-free."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    window_ms = window_days * 86_400_000
-    # the watermark delay is the prune slack: a purchase this much
-    # event-time-late must still find its lookback touches (r7 ADVICE)
-    slack_ms = _duration_ms(watermark)
-    ttl_ms = _duration_ms(idle_ttl) if idle_ttl is not None else None
-
-    class _Attribution(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._touches = handle.getListState("touches", "ts timestamp, channel string")
-
-        def handleInputRows(self, key, rows, timerValues):
-            touches = list(self._touches.get()) if self._touches.exists() else []
-            pdfs = list(rows)
-            batch = pd.concat(pdfs) if pdfs else pd.DataFrame()
-            rows_in = (
-                list(
-                    zip(
-                        batch["event_id"],
-                        batch["ts"],
-                        batch["event_type"],
-                        batch["value"],
-                    )
-                )
-                if len(batch)
-                else []
-            )  # attribution_fold imposes the tie-aware total order itself
-            # NULL user key (r10 review): int(None) would kill the whole
-            # query; the batch twin's LEFT JOIN gives a null-user
-            # purchase no touches and a full-value 'direct' credit, so
-            # the user id passes through as None and the fold does the
-            # same thing (its touch list for the null key is never
-            # populated by a join — only by this key's own rows, which
-            # is exactly the batch semantics for user_id = NULL only if
-            # no touches match; a NULL never equi-joins, so fold with an
-            # EMPTY touch list and keep none)
-            if key[0] is None:
-                purchases_only = [
-                    r for r in rows_in if r[2] == "purchase"
-                ]
-                out, _ = attribution_fold(
-                    None, [], purchases_only, window_ms, slack_ms
-                )
-                touches = []
-            else:
-                out, touches = attribution_fold(
-                    int(key[0]), touches, rows_in, window_ms, slack_ms
-                )
-            if touches:
-                self._touches.put(touches)
-            else:
-                self._touches.clear()
-            if ttl_ms is not None:
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-                self._handle.registerTimer(
-                    timerValues.getCurrentProcessingTimeInMs() + ttl_ms
-                )
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=["event_id", "user_id", "channel", "share", "n_touches"],
-                )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # idle eviction — lossless when idle_ttl >= the lookback
-            # window (see docstring)
-            self._touches.clear()
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_Attribution(),
-            outputStructType=(
-                "event_id bigint, user_id bigint, channel string, "
-                "share double, n_touches int"
-            ),
-            outputMode="Append",
-            timeMode="ProcessingTime" if ttl_ms is not None else "None",
-        )
-    )
-
-
-def interval_join_fold(user_id, clicks, purchases, rows, window_ms, slack_ms=0):
-    """Per-key transition function of the windowed stream-stream join
-    (``interval_join_tws_stream``), factored out so its semantics are
-    unit-testable without the transformWithState Python workers (which
-    need google.protobuf) — the attribution_fold pattern.
-
-    Given this user's carried click/purchase buffers and one
-    micro-batch of rows, return (joined rows, clicks, purchases).  The
-    join contract is q_stream_join's interval join verbatim: every
-    (click, purchase) pair with ``click.ts <= purchase.ts <=
-    click.ts + window_ms``.
-
-    Exactly-once pair emission under ANY arrival interleaving: rows
-    fold in (ts, clicks-before-purchases, event_id) order, and each row
-    first PROBES the opposite buffer (which holds everything that
-    arrived before it) and then INSERTS itself — so a pair emits
-    exactly when its later-arriving side processes, never twice.  The
-    symmetric probe is what makes a LATE click (arriving in a later
-    micro-batch than its purchase, event time admitted by the
-    watermark) still produce its pair — the one-directional
-    probe-on-purchase design would silently drop it.
-
-    Pruning carries the r7-ADVICE slack lesson: clicks prune at
-    ``max_ts - window_ms - slack_ms`` (a still-admissible late purchase
-    at ``max_ts - slack`` can reach a click ``window`` before that) and
-    purchases prune at ``max_ts - slack_ms`` (a purchase only matches
-    clicks at or before its own ts, so once no admissible click can
-    precede it, it is dead).  With ``slack_ms`` covering the watermark
-    delay the buffers are lossless; state per key is bounded by
-    ``window + slack`` of clicks plus ``slack`` of purchases."""
-    import pandas as pd
-
-    out = []
-    max_ts = None
-    win = pd.Timedelta(milliseconds=window_ms)
-    ordered = sorted(rows, key=lambda r: (r[1], r[2] == "purchase", r[0]))
-    for event_id, ts, et, value in ordered:
-        max_ts = ts if max_ts is None or ts > max_ts else max_ts
-        if et == "click":
-            for p_id, p_ts, p_value in purchases:
-                if ts <= p_ts <= ts + win:
-                    out.append(
-                        (int(user_id), int(event_id), ts, int(p_id), p_ts, p_value)
-                    )
-            clicks.append((event_id, ts))
-        elif et == "purchase":
-            for c_id, c_ts in clicks:
-                if c_ts <= ts <= c_ts + win:
-                    out.append(
-                        (int(user_id), int(c_id), c_ts, int(event_id), ts, value)
-                    )
-            purchases.append((event_id, ts, value))
-    if max_ts is not None:
-        slack = pd.Timedelta(milliseconds=slack_ms)
-        c_cut = max_ts - win - slack
-        p_cut = max_ts - slack
-        clicks = [(i, t) for (i, t) in clicks if t >= c_cut]
-        purchases = [(i, t, v) for (i, t, v) in purchases if t >= p_cut]
-    return out, clicks, purchases
-
-
-def interval_join_tws_stream(
-    events: DataFrame,
-    watermark: str = "1 hour",
-    window: str = "2 hours",
-    idle_ttl: str | None = None,
-) -> DataFrame:
-    """Windowed stream-stream JOIN as an explicit stateful operator on
-    the Spark 4 ``transformWithState`` API — ``q_stream_join``'s
-    incremental twin (each purchase matched to same-user clicks at most
-    ``window`` before it), and the r8 new-capability class: where the
-    other tws operators AGGREGATE per key, this one maintains BOTH join
-    buffers as typed ListStates and emits the join product itself.
-
-    Why build it when ``join_streams`` (the native watermarked
-    stream-stream join) exists: the native join's buffer retention and
-    emission policy are fixed by Catalyst; the explicit form is the
-    extension point for join semantics Spark cannot express — per-pair
-    dedup keys, top-1-match joins, join-and-fold outputs — while this
-    baseline stays differential-testable against both the native join
-    and the batch interval join.  State per user key is bounded by
-    ``window + watermark`` of clicks and ``watermark`` of purchases
-    (interval_join_fold's pruning, slack = the watermark delay), so the
-    operator runs forever on an unbounded stream.
-
-    Emission is Append-mode join rows; pair-uniqueness holds across any
-    micro-batch interleaving the watermark admits (probe-then-insert
-    fold order — see interval_join_fold).  ``idle_ttl`` (processing
-    time) additionally evicts whole silent keys via a re-armed per-key
-    timer; time-pruning inside the fold already bounds live keys'
-    state, so the TTL only reclaims abandoned keys (lossless once
-    ``idle_ttl >= window + watermark``, same argument as attribution).
-
-    At scale: RocksDB list state (``ROCKSDB_STATE_CONF``); the shuffle
-    is one hash partitioning of the event stream by user_id — identical
-    to the batch join's equi-join shuffle, amortized across the
-    stream's lifetime.  Runtime gate as the other tws operators: the
-    Python workers need ``google.protobuf``; plan construction is
-    dependency-free."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    window_ms = _duration_ms(window)
-    slack_ms = _duration_ms(watermark)
-    ttl_ms = _duration_ms(idle_ttl) if idle_ttl is not None else None
-
-    class _IntervalJoin(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._clicks = handle.getListState(
-                "clicks", "click_id bigint, ts timestamp"
-            )
-            self._purchases = handle.getListState(
-                "purchases", "purchase_id bigint, ts timestamp, value double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            clicks = list(self._clicks.get()) if self._clicks.exists() else []
-            purchases = (
-                list(self._purchases.get()) if self._purchases.exists() else []
-            )
-            pdfs = list(rows)
-            batch = pd.concat(pdfs) if pdfs else pd.DataFrame()
-            rows_in = (
-                list(
-                    zip(
-                        batch["event_id"],
-                        batch["ts"],
-                        batch["event_type"],
-                        batch["value"],
-                    )
-                )
-                if len(batch)
-                else []
-            )  # interval_join_fold imposes the probe-then-insert order
-            # NULL user key (r10 review): the batch twin is an INNER
-            # equi-join on user_id and a NULL never equi-joins — the
-            # null-keyed group emits nothing and buffers nothing
-            # (int(None) would otherwise kill the whole query)
-            if key[0] is None:
-                self._clicks.clear()
-                self._purchases.clear()
-                return
-            out, clicks, purchases = interval_join_fold(
-                int(key[0]), clicks, purchases, rows_in, window_ms, slack_ms
-            )
-            if clicks:
-                self._clicks.put(clicks)
-            else:
-                self._clicks.clear()
-            if purchases:
-                self._purchases.put(purchases)
-            else:
-                self._purchases.clear()
-            if ttl_ms is not None:
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-                self._handle.registerTimer(
-                    timerValues.getCurrentProcessingTimeInMs() + ttl_ms
-                )
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "user_id", "click_id", "click_ts",
-                        "purchase_id", "purchase_ts", "purchase_value",
-                    ],
-                )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # idle eviction cleans BOTH buffers atomically — the
-            # multi-state cleanup shape timers exist for
-            self._clicks.clear()
-            self._purchases.clear()
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_IntervalJoin(),
-            outputStructType=(
-                "user_id bigint, click_id bigint, click_ts timestamp, "
-                "purchase_id bigint, purchase_ts timestamp, "
-                "purchase_value double"
-            ),
-            outputMode="Append",
-            timeMode="ProcessingTime" if ttl_ms is not None else "None",
-        )
-    )
-
-
-def mg_fold(counts, items, k):
-    """Misra-Gries transition function of the sharded streaming
-    heavy-hitters operator (``heavy_hitters_tws_stream``), factored out
-    for protobuf-free unit testing (the attribution_fold pattern).
-
-    Given the carried counter map (at most ``k`` entries) and one
-    micro-batch of this shard's items, return the updated map.  The MG
-    update: increment a tracked item; start tracking an untracked item
-    while capacity remains; otherwise decrement EVERY counter by one
-    (conceptually cancelling k+1 distinct items against each other) and
-    drop zeros.  Guarantees, per shard: every tracked count is a LOWER
-    bound on the item's true shard count, undercounted by at most
-    (shard stream length)/(k+1) — so any item with true frequency above
-    that bound is guaranteed present, and counts are EXACT whenever the
-    shard's distinct-item count never exceeds k (no decrement ever
-    fires).  Deterministic: no tie-breaking is needed because the
-    decrement touches all counters equally."""
-    for it in items:
-        if it in counts:
-            counts[it] += 1
-        elif len(counts) < k:
-            counts[it] = 1
-        else:
-            for key in list(counts):
-                counts[key] -= 1
-                if counts[key] == 0:
-                    del counts[key]
-    return counts
-
-
-def heavy_hitters_tws_stream(
-    items: DataFrame,
-    col: str = "token",
-    k: int = 64,
-    n_shards: int = 32,
-) -> DataFrame:
-    """Streaming heavy hitters: q_heavy_hitters' incremental twin on
-    ``transformWithState`` with typed MAP STATE — the r8 new state
-    primitive (the other tws operators carry ValueState/ListState; a
-    frequency sketch is the canonical map-shaped state).
-
-    Sharding IS the correctness architecture: items group by
-    ``pmod(hash(item), n_shards)``, so every occurrence of a given item
-    lands in the SAME shard and the per-shard Misra-Gries guarantee
-    (``mg_fold``) applies to the item's FULL stream frequency — shard
-    parallelism without sketch-merge error, unlike sketch-per-partition
-    designs that must merge lossy summaries.  Each micro-batch a shard
-    emits its current tracked (item, cnt_lower) set (Update mode, ≤ k
-    rows per shard); the batch-twin threshold filter (count ≥ N·θ) is a
-    stateless downstream consumer, exactly as the batch operator's
-    exact-count second pass is.
-
-    State is the MapState itself — ≤ k entries per shard regardless of
-    stream length or vocabulary size, the O(1/θ)-space bound that makes
-    vocabulary-head monitoring runnable forever on an unbounded token
-    stream.  The sketch is order-insensitive and aggregates over ALL
-    time, so it declares no watermark and its output carries no
-    event-time column; a pipeline that wants windowed heavy hitters
-    should window BEFORE this operator (feed it one windowed slice) or
-    use the windowed aggregate family instead.
-
-    Runtime gate as the other tws operators: the Python workers need
-    ``google.protobuf``; plan construction is dependency-free and
-    ``mg_fold`` carries the transition semantics under test."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _HeavyHitters(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._counts = handle.getMapState("counts", "item string", "cnt bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            counts = (
-                {it[0]: c[0] for it, c in self._counts.iterator()}
-                if self._counts.exists()
-                else {}
-            )
-            pdfs = list(rows)
-            batch = pd.concat(pdfs) if pdfs else pd.DataFrame()
-            items = batch["item"].tolist() if len(batch) else []
-            before = dict(counts)
-            counts = mg_fold(counts, items, k)
-            # reconcile the MapState against the folded dict: update
-            # changed keys, remove evicted ones (cheaper than clear+
-            # rewrite for the common small-delta batch)
-            for it, c in counts.items():
-                if before.get(it) != c:
-                    self._counts.updateValue((it,), (c,))
-            for it in before:
-                if it not in counts:
-                    self._counts.removeKey((it,))
-            if counts:
-                yield pd.DataFrame(
-                    {
-                        "shard": [int(key[0])] * len(counts),
-                        "item": list(counts),
-                        "cnt_lower": list(counts.values()),
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    keyed = items.select(
-        F.pmod(F.xxhash64(F.col(col)), F.lit(n_shards)).alias("shard"),
-        F.col(col).alias("item"),
-    )
-    return keyed.groupBy("shard").transformWithStateInPandas(
-        statefulProcessor=_HeavyHitters(),
-        outputStructType="shard bigint, item string, cnt_lower bigint",
-        outputMode="Update",
-        timeMode="None",
     )

@@ -564,14 +564,13 @@ def test_attribution_matches_python_reference(spark, events):
         )
 
 
-# ------------------------------------------------ streaming fold twins ----
-# Spark-free randomized differentials: the per-key transition functions
-# of the tws operators vs brute-force batch definitions, over arbitrary
-# WATERMARK-ADMISSIBLE arrival interleavings and random micro-batch
-# cuts.  Arrival order is generated as sort-by-(ts + jitter) with jitter
-# in [0, delay]: every prefix then satisfies ts_i >= max_seen_ts - delay
-# — exactly the set of interleavings a watermark of `delay` admits, so
-# the folds' slack-pruning losslessness claim is the thing under test.
+# ------------------------------------------------- streaming funnel fold ----
+# Spark-free randomized property of funnel_stream's per-key transition
+# function, over arbitrary WATERMARK-ADMISSIBLE arrival interleavings and
+# random micro-batch cuts.  Arrival order is generated as
+# sort-by-(ts + jitter) with jitter in [0, delay]: every prefix then
+# satisfies ts_i >= max_seen_ts - delay — exactly the set of
+# interleavings a watermark of `delay` admits.
 
 _fold_events = st.lists(
     st.tuples(
@@ -601,108 +600,6 @@ def _arrival_batches(events, delay_s, rnd, n_cuts):
             batches.append(arr[lo:c])
             lo = c
     return batches
-
-
-@given(_fold_events, st.integers(min_value=0, max_value=10), st.randoms())
-@settings(**_SETTINGS)
-def test_interval_join_fold_exact_under_admissible_interleavings(
-    events, n_cuts, rnd
-):
-    """Every (click, purchase) pair of the batch interval join — and
-    nothing else — must emit exactly once, for ANY watermark-admissible
-    arrival order and ANY micro-batch segmentation."""
-    from etl_template_spark.streaming import interval_join_fold
-
-    delay_s = 3_600
-    window_ms = 2 * 3_600_000
-    base = pd.Timestamp("2024-01-01")
-
-    expected = sorted(
-        (cu, ce, pe)
-        for ce, (cu, cts, cet, _) in enumerate(events)
-        if cet == "click"
-        for pe, (pu, pts, pet, _) in enumerate(events)
-        if pet == "purchase"
-        and pu == cu
-        and cts <= pts <= cts + window_ms // 1000
-    )
-
-    got, state = [], {}
-    for batch in _arrival_batches(events, delay_s, rnd, n_cuts):
-        per_user: dict = {}
-        for _ak, eid, uid, ts, et in batch:
-            per_user.setdefault(uid, []).append(
-                (eid, base + pd.Timedelta(seconds=ts), et, 1.0)
-            )
-        for uid, rows in per_user.items():
-            clicks, purchases = state.get(uid, ([], []))
-            out, clicks, purchases = interval_join_fold(
-                uid, clicks, purchases, rows, window_ms, delay_s * 1000
-            )
-            state[uid] = (clicks, purchases)
-            got.extend((u, c, p) for (u, c, _ct, p, _pt, _v) in out)
-    assert sorted(got) == expected  # exactly-once AND complete
-
-
-@given(_fold_events, st.integers(min_value=0, max_value=10), st.randoms())
-@settings(**_SETTINGS)
-def test_attribution_fold_totals_under_admissible_interleavings(
-    events, n_cuts, rnd
-):
-    """Per-purchase credit sets must equal the operator's STATED
-    contract under any admissible arrival order and batch cuts: a
-    purchase credits every in-window touch that arrived in the same or
-    an earlier micro-batch (the slack-pruning losslessness property —
-    no eligible-and-arrived touch is ever pruned away), while a touch
-    arriving in a LATER batch than its purchase is conservatively
-    dropped (the documented Append-mode caveat: credit rows are
-    emitted, never retracted).  When arrival order equals event-time
-    order (all jitters 0 — a subset hypothesis explores) the
-    arrival-aware expectation reduces to the batch twin, so this
-    property subsumes the exact-equivalence case."""
-    from etl_template_spark.streaming import attribution_fold
-    from etl_template_spark.streaming.jobs import ATTRIBUTION_TOUCH_TYPES
-
-    delay_s = 3_600
-    window_ms = 2 * 3_600_000
-    base = pd.Timestamp("2024-01-01")
-
-    batches = _arrival_batches(events, delay_s, rnd, n_cuts)
-    batch_of = {
-        eid: bi for bi, b in enumerate(batches) for (_ak, eid, _u, _t, _e) in b
-    }
-
-    def expected_credits():
-        out = {}
-        for pe, (pu, pts, pet, _) in enumerate(events):
-            if pet != "purchase":
-                continue
-            hits = sorted(
-                tet
-                for te, (tu, tts, tet, _) in enumerate(events)
-                if tet in ATTRIBUTION_TOUCH_TYPES
-                and tu == pu
-                and pts - window_ms // 1000 <= tts <= pts
-                and batch_of[te] <= batch_of[pe]  # arrived in time
-            )
-            out[pe] = hits or ["direct"]
-        return out
-
-    got: dict = {}
-    state: dict = {}
-    for batch in batches:
-        per_user: dict = {}
-        for _ak, eid, uid, ts, et in batch:
-            per_user.setdefault(uid, []).append(
-                (eid, base + pd.Timedelta(seconds=ts), et, 1.0)
-            )
-        for uid, rows in per_user.items():
-            out, state[uid] = attribution_fold(
-                uid, state.get(uid, []), rows, window_ms, delay_s * 1000
-            )
-            for (eid, _u, ch, _s, _n) in out:
-                got.setdefault(eid, []).append(ch)
-    assert {k: sorted(v) for k, v in got.items()} == expected_credits()
 
 
 @given(_fold_events, st.integers(min_value=0, max_value=10), st.randoms())
@@ -776,88 +673,6 @@ def test_funnel_fold_monotone_and_batch_parity_under_interleavings(
             assert tc in times["click"] and tc > tv
         if tp is not None:
             assert tp in times["purchase"] and tp > tc
-
-
-# ------------------------------------------------ sharded Misra-Gries ----
-
-
-@given(
-    stream=st.lists(st.integers(0, 12), min_size=1, max_size=300),
-    k=st.integers(min_value=2, max_value=6),
-    n_shards=st.integers(min_value=1, max_value=4),
-    n_splits=st.integers(min_value=1, max_value=4),
-)
-@settings(max_examples=60, deadline=None)
-def test_mg_fold_shard_union_bounds_vs_unsharded(stream, k, n_shards, n_splits):
-    """r8 VERDICT #3 — the invariant not yet pinned: the SHARD-UNION of
-    per-shard mg_fold sketches, over random streams / shardings /
-    micro-batch splits, against the unsharded sketch and the batch
-    Misra-Gries summary (operators/heavy.py):
-
-    - every union count is a lower bound on the item's true frequency,
-      undercounted by at most floor(shard_len/(k+1)) — the PER-SHARD
-      bound, which is ≤ the unsharded stream-length bound (sharding
-      never costs accuracy, the design claim of
-      heavy_hitters_tws_stream);
-    - guaranteed presence: any item whose TRUE GLOBAL frequency exceeds
-      its shard's length/(k+1) is tracked (each item's full stream
-      lands in one shard, so the global frequency IS the shard
-      frequency);
-    - exactness when a shard never exceeds capacity;
-    - both the union and heavy.py's batch MG-merge candidates contain
-      every globally-guaranteed item (the streaming and batch sketches
-      agree on what can never be evicted).
-    """
-    from collections import Counter
-
-    import pandas as pd
-
-    from etl_template_spark.operators.heavy import _mg_partition
-    from etl_template_spark.streaming.jobs import mg_fold
-
-    shards = {
-        s: [x for x in stream if x % n_shards == s] for s in range(n_shards)
-    }
-    union: dict = {}
-    for s, items in shards.items():
-        counts: dict = {}
-        step = max(1, -(-len(items) // n_splits))
-        for i in range(0, len(items), step):  # random-ish micro-batching
-            counts = mg_fold(counts, items[i : i + step], k)
-        assert len(counts) <= k  # the O(k) state bound
-        union.update(counts)
-
-    true = Counter(stream)
-    for it, c in union.items():
-        shard_len = len(shards[it % n_shards])
-        assert c <= true[it]  # lower bound, never an overcount
-        assert true[it] - c <= shard_len // (k + 1)  # undercount bound
-
-    guaranteed = {
-        it
-        for it, t in true.items()
-        if t * (k + 1) > len(shards[it % n_shards])
-    }
-    assert guaranteed <= set(union)
-
-    for s, items in shards.items():
-        if items and len(set(items)) <= k:  # capacity never exceeded
-            for it in set(items):
-                assert union[it] == true[it]
-
-    # unsharded fold obeys the WEAKER whole-stream bound; and the batch
-    # MG summary (heavy.py's mapInPandas body, driven directly) also
-    # retains every globally-guaranteed item of its shard
-    unsharded = mg_fold({}, list(stream), k)
-    for it, c in unsharded.items():
-        assert c <= true[it] and true[it] - c <= len(stream) // (k + 1)
-    for s, items in shards.items():
-        if not items:
-            continue
-        fn = _mg_partition("tok", k)
-        [cand] = list(fn(iter([pd.DataFrame({"tok": items})])))
-        batch_cands = set(cand["tok"])
-        assert {it for it in guaranteed if it % n_shards == s} <= batch_cands
 
 
 # --------------------- weighted pagerank delta-log algebra (late r9) ----

@@ -178,50 +178,9 @@ def test_rocksdb_state_store_provider(spark, events_dir, tmp_path):
             spark.conf.unset(k)
 
 
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-def test_transform_with_state_plan_constructs(spark, events_dir):
-    """transformWithStateInPandas plan construction is environment-free:
-    the unstarted streaming DataFrame must carry the declared output
-    schema (execution needs protobuf — gated test below)."""
-    from etl_template_spark.streaming import running_totals_tws_stream
-
-    totals = running_totals_tws_stream(read_events_stream(spark, events_dir))
-    assert totals.isStreaming
-    assert [f.name for f in totals.schema.fields] == [
-        "user_id", "n_events", "sum_value",
-    ]
-
-
-def test_tws_ttl_selects_processing_time_mode(spark, events_dir):
-    """r10 review: TTL'd state REQUIRES a time mode — with the old
-    hardcoded timeMode="None", Spark's handle validation rejected the
-    ttlDurationMs at stream start, so the operator's documented TTL
-    path could never run.  The analyzed plan must carry ProcessingTime
-    exactly when a TTL is requested."""
-    from etl_template_spark.streaming import running_totals_tws_stream
-
-    stream = read_events_stream(spark, events_dir)
-    with_ttl = running_totals_tws_stream(stream, state_ttl_ms=3_600_000)
-    without = running_totals_tws_stream(stream)
-    assert "ProcessingTime" in with_ttl._jdf.queryExecution().analyzed().toString()
-    assert (
-        "ProcessingTime"
-        not in without._jdf.queryExecution().analyzed().toString()
-    )
-
-
 def test_funnel_fold_is_the_shared_stage_machine():
-    """r10 review: the monotone view→click→purchase fold used to be
-    duplicated verbatim in funnel_stream and funnel_tws_stream; it is
-    now ONE function.  Pin its two subtle rules: stage timestamps are
+    """The monotone view→click→purchase fold that funnel_stream applies
+    per micro-batch.  Pin its two subtle rules: stage timestamps are
     STRICTLY increasing (a click at the view's exact instant does not
     advance), and stages never regress on replayed/late rows."""
     import pandas as pd
@@ -261,72 +220,6 @@ def test_funnel_fold_is_the_shared_stage_machine():
         t("2024-01-01 00:30"),
         t("2024-01-01 00:45"),
     )
-
-
-def test_attribution_fold_null_user_credits_direct():
-    """r10 review: a NULL user key used to kill the whole streaming
-    query via int(None).  The batch twin's LEFT JOIN gives a null-user
-    purchase no touches (NULL never equi-joins) and a full-value
-    'direct' credit — the fold must do the same with user_id=None."""
-    import pandas as pd
-
-    from etl_template_spark.streaming.jobs import attribution_fold
-
-    t = pd.Timestamp
-    out, touches = attribution_fold(
-        None,
-        [],
-        [(7, t("2024-01-01 12:00"), "purchase", 50.0)],
-        window_ms=7 * 86_400_000,
-        slack_ms=0,
-    )
-    assert out == [(7, None, "direct", 50.0, 0)]
-    assert touches == []
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState Python workers require google.protobuf "
-    "(absent in this container; package installation is prohibited here — "
-    "see pyproject [streaming-state] extra); running_totals_stream covers the same "
-    "semantics on applyInPandasWithState",
-)
-def test_transform_with_state_running_totals(spark, events_dir, tmp_path):
-    """transformWithStateInPandas (typed ValueState on RocksDB): the
-    per-user totals must equal both the batch aggregation and the
-    applyInPandasWithState implementation's output."""
-    from etl_template_spark.streaming import running_totals_tws_stream
-    from etl_template_spark.streaming.jobs import ROCKSDB_STATE_CONF
-
-    old = {k: spark.conf.get(k, None) for k in ROCKSDB_STATE_CONF}
-    for k, v in ROCKSDB_STATE_CONF.items():
-        spark.conf.set(k, v)
-    try:
-        stream = read_events_stream(spark, events_dir)
-        totals = running_totals_tws_stream(stream)
-        run_available_now(
-            totals, "tws_totals_out", str(tmp_path / "ckpt_tws"), output_mode="update"
-        )
-        final = {}
-        for r in spark.table("tws_totals_out").collect():
-            final[r["user_id"]] = (r["n_events"], r["sum_value"])
-        batch = (
-            spark.read.schema(
-                "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-                "value double, props string"
-            )
-            .json(events_dir)
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        )
-        expect = {r["user_id"]: (r["n"], r["s"]) for r in batch.collect()}
-        assert final == expect
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_stream_stream_join_matches_batch_twin(spark, tmp_path):
@@ -785,323 +678,6 @@ def test_retention_stream_idle_ttl_evicts_state_rows(spark, tmp_path):
     )
 
 
-def test_funnel_tws_plan_constructs(spark, events_dir):
-    """funnel_tws_stream plan construction is environment-free (both
-    with and without the timer-armed TTL path): the unstarted streaming
-    frame must carry the declared output schema."""
-    from etl_template_spark.streaming import funnel_tws_stream
-
-    for ttl in (None, "90 days"):
-        out = funnel_tws_stream(
-            read_events_stream(spark, events_dir), idle_ttl=ttl
-        )
-        assert out.isStreaming
-        assert [f.name for f in out.schema.fields] == [
-            "user_id", "t_view", "t_click", "t_purchase", "stage",
-        ]
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState Python workers require google.protobuf "
-    "(absent in this container); funnel_stream covers the same "
-    "semantics on applyInPandasWithState",
-)
-def test_funnel_tws_matches_batch_twin_over_backlog(spark, tmp_path):
-    """The typed-state/timer funnel must land on the same final
-    per-user stages as funnel_stream over the same bounded backlog
-    (update mode: keep each user's LAST emission)."""
-    from etl_template_spark.streaming import funnel_tws_stream
-    from etl_template_spark.streaming.jobs import ROCKSDB_STATE_CONF
-
-    rows = [
-        (1, "2024-01-01 10:00:00", 1, "view", 0.0),
-        (2, "2024-01-01 10:10:00", 1, "click", 0.0),
-        (3, "2024-01-01 10:20:00", 1, "purchase", 5.0),
-        (4, "2024-01-01 09:00:00", 2, "click", 0.0),
-        (5, "2024-01-01 10:00:00", 2, "view", 0.0),
-        (6, "2024-01-01 11:00:00", 3, "view", 0.0),
-        (7, "2024-01-01 11:30:00", 3, "click", 0.0),
-        (8, "2024-01-01 12:00:00", 4, "purchase", 9.0),
-    ]
-    path = str(tmp_path / "ev_jsonl")
-    os.makedirs(path)
-    with open(os.path.join(path, "part-0.json"), "w") as f:
-        for e in rows:
-            f.write(json.dumps({
-                "event_id": e[0], "ts": e[1], "user_id": e[2],
-                "event_type": e[3], "value": e[4], "props": "{}",
-            }) + "\n")
-
-    old = {k: spark.conf.get(k, None) for k in ROCKSDB_STATE_CONF}
-    for k, v in ROCKSDB_STATE_CONF.items():
-        spark.conf.set(k, v)
-    try:
-        out = funnel_tws_stream(
-            read_events_stream(spark, path), idle_ttl="90 days"
-        )
-        run_available_now(out, "funnel_tws_out", str(tmp_path / "ckpt"),
-                          output_mode="update")
-        got = {
-            r["user_id"]: r["stage"]
-            for r in spark.table("funnel_tws_out").collect()
-        }
-        assert got == {1: 3, 2: 1, 3: 2}
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def test_attribution_tws_plan_constructs(spark, events_dir):
-    """attribution_tws_stream plan construction is environment-free
-    (with and without the TTL timer path): the unstarted streaming
-    frame must carry the declared credit schema."""
-    from etl_template_spark.streaming import attribution_tws_stream
-
-    for ttl in (None, "7 days"):
-        out = attribution_tws_stream(
-            read_events_stream(spark, events_dir), idle_ttl=ttl
-        )
-        assert out.isStreaming
-        assert [f.name for f in out.schema.fields] == [
-            "event_id", "user_id", "channel", "share", "n_touches",
-        ]
-
-
-def test_attribution_fold_lookback_lower_bound_is_inclusive():
-    """A touch at EXACTLY ``purchase.ts - window`` must earn credit
-    (the batch twin's lookback is the closed interval
-    ``[ts - window, ts]``).  The batch-twin fold test's touches all sit
-    strictly inside the window, so a ``lo < t`` mutant survived every
-    attribution test (boundary-sweep probe) — this plants the edge:
-    with the inclusive bound the credit goes to the touch channel,
-    with the exclusive mutant it silently falls back to 'direct'."""
-    import pandas as pd
-
-    from etl_template_spark.streaming import attribution_fold
-
-    window_ms = 7 * 86_400_000
-    t0 = pd.Timestamp("2024-01-01 00:00:00")
-    purchase_ts = t0 + pd.Timedelta(milliseconds=window_ms)
-    rows = [
-        (1, t0, "click", 0.0),
-        (2, purchase_ts, "purchase", 10.0),
-    ]
-    out, _ = attribution_fold(7, [], rows, window_ms)
-    assert out == [(2, 7, "click", 10.0, 1)]
-
-
-def test_interval_join_fold_window_upper_bound_is_inclusive():
-    """A purchase at EXACTLY ``click.ts + window`` must pair (the batch
-    twin's predicate is ``p.ts <= c.ts + window``).  The batch-twin
-    fold test has a same-instant pair (pinning the LOWER bound) but no
-    exactly-window-late purchase, so a ``< c_ts + win`` mutant survived
-    (boundary-sweep probe) — this plants the edge."""
-    import pandas as pd
-
-    from etl_template_spark.streaming import interval_join_fold
-
-    window_ms = 2 * 3_600_000
-    t0 = pd.Timestamp("2024-01-01 09:00:00")
-    p_ts = t0 + pd.Timedelta(milliseconds=window_ms)
-    rows = [
-        (1, t0, "click", 0.0),
-        (2, p_ts, "purchase", 5.0),
-    ]
-    out, _, _ = interval_join_fold(3, [], [], rows, window_ms)
-    assert out == [(3, 1, t0, 2, p_ts, 5.0)]
-    # and through the SYMMETRIC branch (a LATE click probing the
-    # buffered purchase — the other code path carries its own bound):
-    # purchase arrives alone in batch 1, the exactly-window-earlier
-    # click in batch 2; slack keeps the purchase probeable
-    out1, clicks, purchases = interval_join_fold(
-        3, [], [], [(2, p_ts, "purchase", 5.0)], window_ms, slack_ms=window_ms
-    )
-    assert out1 == []
-    out2, _, _ = interval_join_fold(
-        3, clicks, purchases, [(1, t0, "click", 0.0)], window_ms,
-        slack_ms=window_ms,
-    )
-    assert out2 == [(3, 1, t0, 2, p_ts, 5.0)]
-    # symmetric branch LOWER bound: a SAME-INSTANT pair split across
-    # batches (purchase first, the tying click late) — the one-batch
-    # same-instant case routes through the purchase-probes-clicks
-    # branch instead, so it cannot pin this bound
-    out3, clicks3, purchases3 = interval_join_fold(
-        4, [], [], [(6, t0, "purchase", 2.0)], window_ms, slack_ms=window_ms
-    )
-    assert out3 == []
-    out4, _, _ = interval_join_fold(
-        4, clicks3, purchases3, [(5, t0, "click", 0.0)], window_ms,
-        slack_ms=window_ms,
-    )
-    assert out4 == [(4, 5, t0, 6, t0, 2.0)]
-
-
-def test_attribution_fold_matches_batch_twin_over_microbatches(spark):
-    """The factored per-key transition function, driven over simulated
-    micro-batches (cross-batch touch carry + lossless pruning), must
-    land on exactly the batch q_attribution_linear channel totals for
-    the same events — including a touch outside the lookback, a
-    same-timestamp touch (inclusive bound), and a touchless 'direct'
-    purchase in a later batch."""
-    import pandas as pd
-
-    import etl_template_spark.queries.attribution as attr
-    from etl_template_spark.streaming import attribution_fold
-
-    rows = [
-        (1, "2024-01-01 00:00:00", 1, "click", 0.0),    # outside 7d of the purchase
-        (2, "2024-01-05 00:00:00", 1, "view", 0.0),     # in window (batch 1)
-        (3, "2024-01-09 12:00:00", 1, "click", 0.0),    # in window (batch 2)
-        (4, "2024-01-10 00:00:00", 1, "purchase", 12.0),
-        (5, "2024-01-10 00:00:00", 1, "signup", 0.0),   # same-ts: inclusive? no — ts ties
-        (6, "2024-01-12 00:00:00", 2, "purchase", 7.0),  # touchless → direct
-        (7, "2024-01-13 00:00:00", 1, "purchase", 6.0),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts string, user_id long, event_type string, value double"
-    ).withColumn("ts", F.to_timestamp("ts"))
-
-    orig = attr.load_table
-    attr.load_table = lambda *_: df
-    try:
-        batch_totals = {
-            r["channel"]: (r["n_credits"], round(r["attributed_value"], 6))
-            for r in attr.q_attribution_linear(spark, "unused").collect()
-        }
-    finally:
-        attr.load_table = orig
-
-    # drive the fold per user over two micro-batches split mid-journey
-    window_ms = 7 * 86_400_000
-    pdf = pd.DataFrame(
-        [(e, pd.Timestamp(t), u, et, v) for (e, t, u, et, v) in rows],
-        columns=["event_id", "ts", "user_id", "event_type", "value"],
-    )
-    batches = [pdf[pdf["event_id"] <= 2], pdf[pdf["event_id"] > 2]]
-    credits = []
-    state: dict = {}
-    for b in batches:
-        for uid, grp in b.groupby("user_id"):
-            ordered = [
-                (r.event_id, r.ts, r.event_type, r.value)
-                for r in grp.sort_values(["ts", "event_id"]).itertuples()
-            ]
-            out, state[uid] = attribution_fold(
-                uid, state.get(uid, []), ordered, window_ms
-            )
-            credits.extend(out)
-
-    got: dict = {}
-    for _eid, _uid, ch, share, _n in credits:
-        cur = got.setdefault(ch, [0, 0.0])
-        cur[0] += 1
-        cur[1] += round(share, 6)
-    got_totals = {ch: (n, round(v, 6)) for ch, (n, v) in got.items()}
-    assert got_totals == batch_totals
-    # and pruning really dropped the stale touch: user 1's carried state
-    # after the last batch holds only touches within 7d of its max ts
-    assert all(t >= pd.Timestamp("2024-01-06") for (t, _) in state[1])
-
-
-def test_attribution_fold_late_purchase_keeps_slack_touches():
-    """r7 ADVICE (medium): a purchase may arrive in a LATER micro-batch
-    with an EARLIER event time (anything the watermark admits).  Its
-    lookback ``[ts - 7d, ts]`` reaches touches in
-    ``[max_ts - 7d - delay, max_ts - 7d)`` — which slack-less pruning
-    has already dropped, silently degrading the credit to 'direct'.
-    With ``slack_ms`` = the watermark delay the credit survives; the
-    slack-less fold demonstrably loses it (the regression shape)."""
-    import pandas as pd
-
-    from etl_template_spark.streaming import attribution_fold
-
-    window_ms = 7 * 86_400_000
-    slack_ms = 3_600_000  # "1 hour" watermark
-    # batch 1: a touch just inside the slack band, plus a much newer
-    # event that drags max_batch_ts forward so the prune cutoff passes
-    # the touch
-    b1 = [
-        (1, pd.Timestamp("2024-01-02 23:30:00"), "click", 0.0),
-        (2, pd.Timestamp("2024-01-10 00:00:00"), "view", 0.0),
-    ]
-    # batch 2: the late purchase — event time 50 min behind batch 1's
-    # max, admissible under the 1 h watermark; its lookback includes
-    # the 01-02 23:30 touch
-    b2 = [(3, pd.Timestamp("2024-01-09 23:10:00"), "purchase", 10.0)]
-
-    # with slack: the touch survives pruning and earns the credit
-    out1, touches = attribution_fold(1, [], b1, window_ms, slack_ms)
-    assert out1 == []
-    assert (pd.Timestamp("2024-01-02 23:30:00"), "click") in touches
-    out2, _ = attribution_fold(1, touches, b2, window_ms, slack_ms)
-    # the 01-10 view is AFTER the purchase's event time → excluded by
-    # the inclusive upper bound; only the slack-retained click credits
-    assert [ch for (_e, _u, ch, _s, _n) in out2] == ["click"]
-
-    # without slack (the pre-fix behavior): the touch is pruned at
-    # max_ts - 7d = 01-03 00:00 and the purchase falls back to direct
-    _, touches0 = attribution_fold(1, [], b1, window_ms)
-    assert (pd.Timestamp("2024-01-02 23:30:00"), "click") not in touches0
-    out2b, _ = attribution_fold(1, touches0, b2, window_ms)
-    assert [ch for (_e, _u, ch, _s, _n) in out2b] == ["direct"]
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState Python workers require google.protobuf "
-    "(absent in this container; package installation is prohibited here — "
-    "see pyproject [streaming-state] extra); attribution_fold carries the same "
-    "transition semantics and is tested above",
-)
-def test_attribution_tws_matches_batch_twin(spark, tmp_path):
-    """End-to-end tws run over a bounded backlog: per-channel share
-    totals from the streamed credits must equal q_attribution_linear
-    on the same events."""
-    from etl_template_spark.streaming import attribution_tws_stream
-    from etl_template_spark.streaming.jobs import ROCKSDB_STATE_CONF
-
-    rows = [
-        (1, "2024-01-05 00:00:00", 1, "view", 0.0),
-        (2, "2024-01-09 00:00:00", 1, "click", 0.0),
-        (3, "2024-01-10 00:00:00", 1, "purchase", 12.0),
-        (4, "2024-01-12 00:00:00", 2, "purchase", 7.0),
-    ]
-    path = str(tmp_path / "ev_jsonl")
-    os.makedirs(path)
-    with open(os.path.join(path, "part-0.json"), "w") as f:
-        for e in rows:
-            f.write(json.dumps({
-                "event_id": e[0], "ts": e[1], "user_id": e[2],
-                "event_type": e[3], "value": e[4], "props": "{}",
-            }) + "\n")
-
-    old = {k: spark.conf.get(k, None) for k in ROCKSDB_STATE_CONF}
-    for k, v in ROCKSDB_STATE_CONF.items():
-        spark.conf.set(k, v)
-    try:
-        out = attribution_tws_stream(
-            read_events_stream(spark, path), idle_ttl="7 days"
-        )
-        run_available_now(out, "attr_tws_out", str(tmp_path / "ckpt"))
-        got = {}
-        for r in spark.table("attr_tws_out").collect():
-            cur = got.setdefault(r["channel"], [0, 0.0])
-            cur[0] += 1
-            cur[1] += r["share"]
-        assert got == {"view": [1, 6.0], "click": [1, 6.0], "direct": [1, 7.0]}
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 def test_commit_stream_batch_replay_is_exactly_once(spark, tmp_path):
     """foreachBatch redelivery: committing the SAME batch id twice must
     land exactly one version (the replay returns the original version
@@ -1172,307 +748,6 @@ def test_commit_stream_batch_marker_rides_the_atomic_publish(spark, tmp_path):
     assert os.path.isfile(os.path.join(d, "_SUCCESS"))
     with open(os.path.join(d, BATCH_MARKER)) as f:
         assert f.read() == "7"
-
-
-# ---------------------------------------------------------------- r8 ------
-# windowed stream-stream interval join on transformWithState
-
-
-def test_interval_join_tws_plan_constructs(spark, events_dir):
-    """interval_join_tws_stream plan construction is environment-free
-    (with and without the TTL timer path): the unstarted streaming
-    frame must carry the declared join-row schema."""
-    from etl_template_spark.streaming import interval_join_tws_stream
-
-    for ttl in (None, "1 day"):
-        out = interval_join_tws_stream(
-            read_events_stream(spark, events_dir), idle_ttl=ttl
-        )
-        assert out.isStreaming
-        assert [f.name for f in out.schema.fields] == [
-            "user_id", "click_id", "click_ts",
-            "purchase_id", "purchase_ts", "purchase_value",
-        ]
-
-
-def _drive_interval_join_fold(batches, window_ms, slack_ms):
-    """Run interval_join_fold per user over a list of pandas micro-
-    batches, returning all emitted join rows."""
-    from etl_template_spark.streaming import interval_join_fold
-
-    rows, state = [], {}
-    for b in batches:
-        for uid, grp in b.groupby("user_id"):
-            ordered = [
-                (r.event_id, r.ts, r.event_type, r.value)
-                for r in grp.sort_values(["ts", "event_id"]).itertuples()
-            ]
-            clicks, purchases = state.get(uid, ([], []))
-            out, clicks, purchases = interval_join_fold(
-                uid, clicks, purchases, ordered, window_ms, slack_ms
-            )
-            state[uid] = (clicks, purchases)
-            rows.extend(out)
-    return rows, state
-
-
-def test_interval_join_fold_matches_batch_twin_over_microbatches(spark):
-    """The factored join transition function, driven over simulated
-    micro-batches, must land on exactly the batch q_stream_join rows
-    for the same events — including a cross-batch pair, a same-instant
-    pair (inclusive bounds), an out-of-window click, a LATE CLICK
-    arriving after its purchase (the symmetric probe), and a LATE
-    PURCHASE reaching a slack-retained click."""
-    import pandas as pd
-
-    import etl_template_spark.queries.streaming_batch as sb
-
-    rows = [
-        # user 1: ordinary click→purchase split across batches
-        (1, "2024-01-01 10:00:00", 1, "click", 0.0),
-        (2, "2024-01-01 11:30:00", 1, "purchase", 20.0),     # batch 2
-        # user 1: out-of-window click (3h before the purchase)
-        (3, "2024-01-01 08:30:00", 1, "click", 0.0),
-        # user 2: same-instant click+purchase (inclusive bound)
-        (4, "2024-01-02 09:00:00", 2, "click", 0.0),
-        (5, "2024-01-02 09:00:00", 2, "purchase", 5.0),
-        # user 3: LATE CLICK — purchase arrives in batch 2, the click
-        # (earlier event time, within the 1h watermark) only in batch 3
-        (6, "2024-01-03 12:40:00", 3, "purchase", 7.0),      # batch 2
-        (7, "2024-01-03 12:10:00", 3, "click", 0.0),         # batch 3, late
-        # user 4: LATE PURCHASE — a newer event drags max_ts forward in
-        # batch 2; the purchase arrives in batch 3 with an event time
-        # whose window reaches the click only slack-retention keeps
-        (8, "2024-01-04 10:00:00", 4, "click", 0.0),
-        (9, "2024-01-04 12:30:00", 4, "click", 0.0),         # batch 2
-        (10, "2024-01-04 11:55:00", 4, "purchase", 9.0),     # batch 3, late
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts string, user_id long, event_type string, value double"
-    ).withColumn("ts", F.to_timestamp("ts"))
-
-    orig = sb.load_table
-    sb.load_table = lambda *_: df
-    try:
-        batch_rows = sorted(
-            map(tuple, sb.q_stream_join(spark, "unused").collect())
-        )
-    finally:
-        sb.load_table = orig
-
-    pdf = pd.DataFrame(
-        [(e, pd.Timestamp(t), u, et, v) for (e, t, u, et, v) in rows],
-        columns=["event_id", "ts", "user_id", "event_type", "value"],
-    )
-    batches = [
-        pdf[pdf["event_id"].isin([1, 3, 4, 5, 8])],
-        pdf[pdf["event_id"].isin([2, 6, 9])],
-        pdf[pdf["event_id"].isin([7, 10])],
-    ]
-    window_ms = 2 * 3_600_000
-    got, state = _drive_interval_join_fold(
-        batches, window_ms, slack_ms=3_600_000
-    )
-    got_rows = sorted(
-        (u, c, cts.to_pydatetime(), p, pts.to_pydatetime(), v)
-        for (u, c, cts, p, pts, v) in got
-    )
-    assert got_rows == batch_rows
-    # sanity on the scenario itself: 4 pairs, one per user
-    assert len(batch_rows) == 4
-    # pruning really bounded the buffers: user 4's click buffer holds
-    # nothing older than max_ts - window - slack
-    import pandas as _pd
-
-    for uid, (clicks, purchases) in state.items():
-        assert all(
-            t >= _pd.Timestamp("2024-01-04 09:30:00") for (_i, t) in clicks
-        ) or uid != 4
-
-
-def test_interval_join_fold_slackless_drops_late_sides():
-    """Regression shape: with slack_ms=0 the late-click pair still
-    emits (the click probes buffered purchases), but the late-PURCHASE
-    pair is lost because its click was pruned at max_ts - window —
-    exactly the r7-ADVICE failure mode the watermark slack closes."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        [
-            (8, pd.Timestamp("2024-01-04 10:00:00"), 4, "click", 0.0),
-            (9, pd.Timestamp("2024-01-04 12:30:00"), 4, "click", 0.0),
-            (10, pd.Timestamp("2024-01-04 11:55:00"), 4, "purchase", 9.0),
-        ],
-        columns=["event_id", "ts", "user_id", "event_type", "value"],
-    )
-    batches = [
-        pdf[pdf["event_id"].isin([8])],
-        pdf[pdf["event_id"].isin([9])],
-        pdf[pdf["event_id"].isin([10])],
-    ]
-    window_ms = 2 * 3_600_000
-    with_slack, _ = _drive_interval_join_fold(batches, window_ms, 3_600_000)
-    without, _ = _drive_interval_join_fold(batches, window_ms, 0)
-    assert {c for (_u, c, *_r) in with_slack} == {8}
-    assert without == []  # click 8 pruned after batch 2; pair lost
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState Python workers require google.protobuf "
-    "(absent in this container; pip install is prohibited here — see "
-    "pyproject dev extra); interval_join_fold carries the same "
-    "transition semantics and is tested above",
-)
-def test_interval_join_tws_matches_batch_twin(spark, tmp_path):
-    """Full transformWithStateInPandas run vs the batch interval join."""
-    import pandas as pd
-
-    import etl_template_spark.queries.streaming_batch as sb
-    from etl_template_spark.streaming import interval_join_tws_stream
-
-    rows = [
-        (1, "2024-01-01 10:00:00", 1, "click", 0.0),
-        (2, "2024-01-01 11:30:00", 1, "purchase", 20.0),
-        (4, "2024-01-02 09:00:00", 2, "click", 0.0),
-        (5, "2024-01-02 09:00:00", 2, "purchase", 5.0),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts string, user_id long, event_type string, value double"
-    ).withColumn("ts", F.to_timestamp("ts"))
-    orig = sb.load_table
-    sb.load_table = lambda *_: df
-    try:
-        expected = sorted(map(tuple, sb.q_stream_join(spark, "unused").collect()))
-    finally:
-        sb.load_table = orig
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    pdf = df.toPandas()
-    with open(os.path.join(src, "all.jsonl"), "w") as f:
-        for _, r in pdf.iterrows():
-            f.write(json.dumps({
-                "event_id": int(r.event_id),
-                "ts": r.ts.isoformat(sep=" "),
-                "user_id": int(r.user_id),
-                "event_type": r.event_type,
-                "value": float(r.value),
-                "props": None,
-            }) + "\n")
-    out = interval_join_tws_stream(read_events_stream(spark, src))
-    q = (
-        out.writeStream.format("memory").queryName("ij_tws")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = sorted(map(tuple, spark.sql("SELECT * FROM ij_tws").collect()))
-    assert got == expected
-
-
-# ---------------------------------------------------------------- r8 ------
-# sharded streaming heavy hitters on MapState
-
-
-def test_mg_fold_guarantees_on_zipf_stream():
-    """Misra-Gries invariants over a Zipf-ish stream driven in
-    micro-batches: (1) tracked counts are LOWER bounds on true counts,
-    (2) undercount is at most stream_len/(k+1), (3) every item with
-    true count > stream_len/(k+1) is tracked, (4) at most k entries."""
-    import random
-
-    from etl_template_spark.streaming import mg_fold
-
-    rng = random.Random(8)
-    # Zipf-ish: item i appears ~ 1/i
-    stream = [f"w{i}" for i in range(1, 60) for _ in range(600 // i)]
-    rng.shuffle(stream)
-    true = {}
-    for it in stream:
-        true[it] = true.get(it, 0) + 1
-
-    k = 16
-    counts = {}
-    for start in range(0, len(stream), 500):  # micro-batches of 500
-        counts = mg_fold(counts, stream[start : start + 500], k)
-
-    n = len(stream)
-    assert len(counts) <= k
-    for it, c in counts.items():
-        assert c <= true[it]
-        assert true[it] - c <= n / (k + 1)
-    for it, t in true.items():
-        if t > n / (k + 1):
-            assert it in counts, f"guaranteed heavy hitter {it} missing"
-
-
-def test_mg_fold_exact_when_capacity_suffices():
-    """With k >= distinct items no decrement ever fires: the sketch IS
-    the exact frequency table, independent of batch boundaries."""
-    from etl_template_spark.streaming import mg_fold
-
-    stream = ["a"] * 5 + ["b"] * 3 + ["c"] * 2
-    one_shot = mg_fold({}, list(stream), 10)
-    batched = {}
-    for i in range(0, len(stream), 3):
-        batched = mg_fold(batched, stream[i : i + 3], 10)
-    assert one_shot == batched == {"a": 5, "b": 3, "c": 2}
-
-
-def test_heavy_hitters_tws_plan_constructs(spark, events_dir):
-    """heavy_hitters_tws_stream plan construction is environment-free:
-    the unstarted streaming frame must carry the declared sketch-row
-    schema, keyed by the hash shard."""
-    from etl_template_spark.streaming import heavy_hitters_tws_stream
-
-    stream = read_events_stream(spark, events_dir).select(
-        F.col("event_type").alias("token"), "ts"
-    )
-    out = heavy_hitters_tws_stream(stream, col="token", k=8, n_shards=4)
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == ["shard", "item", "cnt_lower"]
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState Python workers require google.protobuf "
-    "(absent in this container; package installation is prohibited here — "
-    "see pyproject [streaming-state] extra); mg_fold carries the same "
-    "transition semantics and is tested above",
-)
-def test_heavy_hitters_tws_matches_exact_counts(spark, events_dir, tmp_path):
-    """Full MapState run with ample capacity: final per-item lower
-    bounds equal the exact batch counts."""
-    from etl_template_spark.streaming import heavy_hitters_tws_stream
-
-    stream = read_events_stream(spark, events_dir).select(
-        F.col("event_type").alias("token")
-    )
-    out = heavy_hitters_tws_stream(stream, col="token", k=64, n_shards=4)
-    q = (
-        out.writeStream.format("memory").queryName("hh_tws")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = {
-        r["item"]: r["cnt_lower"]
-        for r in spark.sql(
-            "SELECT item, MAX(cnt_lower) AS cnt_lower FROM hh_tws GROUP BY item"
-        ).collect()
-    }
-    batch = (
-        spark.read.schema(
-            "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-            "value double, props string"
-        )
-        .json(events_dir)
-        .groupBy("event_type")
-        .count()
-    )
-    expect = {r["event_type"]: r["count"] for r in batch.collect()}
-    assert got == expect
 
 
 def test_commit_stream_batch_out_of_order_replay_falls_back_to_scan(spark, tmp_path):
